@@ -323,7 +323,9 @@ object SparkEntry {
     finish(top, idx.docs, k)
   }
 
-  /** Conjunctive (AND / -term) query through the leapfrog intersect. */
+  /** Conjunctive (AND / -term) query: the block-max WAND term evaluator
+    * at m = n, with the `-term` exclusions.
+    */
   private[graft] def bm25And(s: SparkSession, dir: String, q: String, k: Int = 10): DataFrame = {
     val idx = index(s, dir)
     val top = QueryEngine.conjunctiveTopK(s, idx.blocks, idx.termStats,

@@ -92,10 +92,24 @@ object QueryEngine {
       .orderBy(col("score").desc, col("docId").asc)
   }
 
-  // ---------------------------------------------------------------- WAND
+  // ------------------------------------------------- the term evaluator
 
   /** Query-term state passed to executors: weight = qtf * idf. */
   private[query] final case class QTerm(term: String, weight: Double)
+
+  /** A phrase-free, field-free query as the one term evaluator runs it:
+    * weighted SHOULD terms (dictionary-present, ascending term order), the
+    * minimum number `m` of them a document must contain, and MUST_NOT
+    * terms (dictionary-present). Plain queries are m = 1, AND is m = n,
+    * `-term` tokens are MUST_NOT, wildcards add SHOULD terms.
+    */
+  private[query] final case class TermQuery(should: Seq[QTerm], m: Int, mustNot: Seq[String])
+
+  /** A [[TermQuery]] before the dictionary lookup: analyzed (term, qtf)
+    * SHOULD terms and analyzed MUST_NOT terms.
+    */
+  private final case class TermSpec(qid: String, should: Seq[(String, Int)], m: Int,
+      mustNot: Seq[String] = Nil)
 
   /** Blocks with the positions column replaced by an empty literal: the
     * typed Dataset[PostingBlock] deserializer would otherwise force the
@@ -109,7 +123,98 @@ object QueryEngine {
       .as[PostingBlock]
   }
 
-  /** Block-max WAND top-k over encoded blocks.
+  /** The one pipeline behind every term query: ONE idf collect for
+    * the whole batch, then ONE term-pushed block scan → hash repartition
+    * on shardId → (shardId, term, minDocId) sort → per-shard block-max
+    * WAND ([[WandScorer]]). Returns the per-shard top-k candidates as
+    * (qid, docId, score), or None when no query can match anything (no
+    * scan is issued then).
+    *
+    * Compilation: a SHOULD term absent from the dictionary is dropped and
+    * a query left with fewer than m SHOULD terms is empty; an absent
+    * MUST_NOT term excludes nothing.
+    */
+  private def termCandidates(
+      spark: SparkSession,
+      blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat],
+      corpus: CorpusStats,
+      specs: Seq[TermSpec],
+      k: Int,
+      cfg: IndexBuilder.Config,
+      tombstones: TombstoneSet
+  ): Option[DataFrame] = {
+    import spark.implicits._
+    // m >= 1, so a query without SHOULD terms matches nothing
+    val live = specs.filter(_.should.nonEmpty)
+    val names = live.flatMap(s => s.should.map(_._1) ++ s.mustNot).distinct
+    if (names.isEmpty) return None
+    val idfs: Map[String, Double] = termStats
+      .filter($"term".isin(names: _*))
+      .collect().map(t => t.term -> t.idf).toMap
+    val compiled: Seq[(String, TermQuery)] = live.flatMap { s =>
+      val should = s.should.collect {
+        case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
+      }.sortBy(_.term)
+      if (should.size < s.m) None
+      else Some(s.qid -> TermQuery(should, s.m, s.mustNot.filter(idfs.contains)))
+    }
+    if (compiled.isEmpty) return None
+    val scanNames = compiled.flatMap { case (_, q) => q.should.map(_.term) ++ q.mustNot }.distinct
+
+    val p = cfg.params
+    val avgdl = corpus.avgdl
+    val kk = k
+    val qB = spark.sparkContext.broadcast(compiled)
+    val tsB = tombstones.broadcastVia(spark)
+    // one task per core, several shards per task (scorePartition iterates
+    // shard groups); HASH partitioning on shardId keeps a shard's blocks
+    // together without a RangePartitioner's extra sampling job
+    val parts = math.max(1, math.min(cfg.numShards,
+      spark.sparkContext.defaultParallelism))
+    Some(scoringBlocks(blocks)
+      .filter($"term".isin(scanNames: _*))
+      .repartition(parts, $"shardId")
+      .sortWithinPartitions($"shardId", $"term", $"minDocId")
+      .mapPartitions { it =>
+        WandScorer.scorePartition(it.buffered, qB.value, kk, p.k1, p.b, avgdl, tsB.value)
+      }
+      .toDF("qid", "docId", "score"))
+  }
+
+  /** A single term query: a batch of one, finished by
+    * orderBy(score desc, docId asc).limit(k) (planned as
+    * TakeOrderedAndProject).
+    */
+  private def termTopK(spark: SparkSession, blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat], corpus: CorpusStats, spec: TermSpec, k: Int,
+      cfg: IndexBuilder.Config, tombstones: TombstoneSet): DataFrame =
+    termCandidates(spark, blocks, termStats, corpus, Seq(spec), k, cfg, tombstones)
+      .fold(emptyScores(spark))(_.select(col("docId"), col("score"))
+        .orderBy(col("score").desc, col("docId").asc).limit(k))
+
+  /** A term-query batch in one scoring job, finished by a per-qid window
+    * under the same (score desc, docId asc) tie-break.
+    */
+  private def termTopKBatch(spark: SparkSession, blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat], corpus: CorpusStats, specs: Seq[TermSpec], k: Int,
+      cfg: IndexBuilder.Config, tombstones: TombstoneSet): DataFrame = {
+    import spark.implicits._
+    // a duplicated qid would merge two queries' candidates in the per-qid
+    // window finish — reject instead of silently corrupting the top-k
+    require(specs.map(_.qid).distinct.size == specs.size,
+      s"duplicate qids in batch: ${specs.map(_.qid)}")
+    termCandidates(spark, blocks, termStats, corpus, specs, k, cfg, tombstones) match {
+      case None => spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score")
+      case Some(candidates) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy($"qid").orderBy($"score".desc, $"docId".asc)
+        candidates.withColumn("rn", row_number().over(w))
+          .filter($"rn" <= k).drop("rn")
+    }
+  }
+
+  /** Block-max WAND top-k over encoded blocks (m = 1: disjunctive).
     *
     * @param blocks     the PostingBlock dataset/table (parquet-backed when
     *                   reading a built index; term predicate is pushed to
@@ -126,45 +231,9 @@ object QueryEngine {
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
-  ): DataFrame = {
-    import spark.implicits._
-    val analyzed = Analyzer.analyzeQuery(query, cfg.analyzer)
-    if (analyzed.isEmpty) return emptyScores(spark)
-    val names = analyzed.map(_._1)
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    // terms absent from the corpus contribute 0: drop up front
-    val qts: Seq[QTerm] = analyzed.collect {
-      case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
-    }
-    if (qts.isEmpty) return emptyScores(spark)
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val qtsB = spark.sparkContext.broadcast(qts.sortBy(_.term))
-    val tsB = tombstones.broadcastVia(spark)
-
-    // one task per core, several shards per task (scorePartition iterates
-    // shard groups); HASH partitioning on shardId keeps a shard's blocks
-    // together exactly like the former repartitionByRange did, without the
-    // RangePartitioner's extra sampling pass over the filtered scan (one
-    // whole Spark job per query at serving latency)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    val candidates = scoringBlocks(blocks)
-      .filter($"term".isin(names: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        WandScorer.scorePartition(it.buffered, qtsB.value, kk, p.k1, p.b, avgdl,
-          tsB.value)
-      }
-      .toDF("docId", "score")
-
-    candidates.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
+  ): DataFrame =
+    termTopK(spark, blocks, termStats, corpus,
+      TermSpec("", Analyzer.analyzeQuery(query, cfg.analyzer), 1), k, cfg, tombstones)
 
   /** Multi-query WAND: scores a whole query batch in ONE Spark job,
     * amortizing the per-job scheduler floor (BASELINE.md measured p50
@@ -185,57 +254,17 @@ object QueryEngine {
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
-  ): DataFrame = {
-    import spark.implicits._
-    // a duplicated qid would merge two queries' candidates in the per-qid
-    // window finish — reject instead of silently corrupting the top-k
-    require(queries.map(_._1).distinct.size == queries.size,
-      s"duplicate qids in batch: ${queries.map(_._1)}")
-    def empty: DataFrame =
-      spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score")
-    val analyzed = queries.map { case (id, q) => id -> Analyzer.analyzeQuery(q, cfg.analyzer) }
-    val names = analyzed.flatMap(_._2.map(_._1)).distinct
-    if (names.isEmpty) return empty
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    val perQuery: Seq[(String, Seq[QTerm])] = analyzed
-      .map { case (id, qs) =>
-        id -> qs.collect { case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t)) }
-          .sortBy(_.term)
-      }
-      .filter(_._2.nonEmpty)
-    if (perQuery.isEmpty) return empty
-    val liveNames = perQuery.flatMap(_._2.map(_.term)).distinct
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val qB = spark.sparkContext.broadcast(perQuery)
-    val tsB = tombstones.broadcastVia(spark)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    val candidates = scoringBlocks(blocks)
-      .filter($"term".isin(liveNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        WandScorer.scorePartitionBatch(it.buffered, qB.value, kk, p.k1, p.b, avgdl,
-          tsB.value)
-      }
-      .toDF("qid", "docId", "score")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"score".desc, $"docId".asc)
-    candidates.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= k).drop("rn")
-  }
+  ): DataFrame =
+    termTopKBatch(spark, blocks, termStats, corpus,
+      queries.map { case (id, q) => TermSpec(id, Analyzer.analyzeQuery(q, cfg.analyzer), 1) },
+      k, cfg, tombstones)
 
   // --------------------------------------------------- shared scorer glue
 
   /** Consume ONE shard group from a (shardId, term, minDocId)-sorted block
     * stream: every block of the head shard, keyed by term. The single
-    * definition behind all three block scorers (WAND, conjunctive,
-    * phrase) — a shard-grouping fix lands everywhere at once.
+    * definition behind both block scorers (term and phrase) — a
+    * shard-grouping fix lands everywhere at once.
     */
   private[query] def nextShardGroup(
       it: BufferedIterator[PostingBlock]
@@ -252,8 +281,7 @@ object QueryEngine {
 
   /** Bounded top-k accumulator under the global tie-break (score desc,
     * docId asc): the evictable worst entry is the smallest score, ties
-    * broken toward the larger docId. Shared by the WAND and conjunctive
-    * shard scorers so the ranking contract has exactly one definition.
+    * broken toward the larger docId.
     */
   private[query] final class TopKHeap(k: Int) {
     private val ord: Ordering[(Long, Double)] = new Ordering[(Long, Double)] {
@@ -282,7 +310,7 @@ object QueryEngine {
     def drain(): Seq[(Long, Double)] = heap.dequeueAll.reverse
   }
 
-  // --------------------------------------------- conjunctive (boolean AND)
+  // --------------------------------------------- AND, m-of-n and wildcards
 
   /** Split a search-box query into (positive text, excluded terms): a
     * whitespace token starting with '-' is an exclusion ("spark join
@@ -303,13 +331,10 @@ object QueryEngine {
     * reference UI's free-text search implies it, App.js) — WAND's
     * disjunctive top-k is the recall-oriented complement.
     *
-    * Exactness and scale: candidates are intersected per docId-range shard
-    * with the same leapfrog skip machinery as the phrase engine (blocks
-    * skipped on maxDocId metadata without decoding), so work is bounded by
-    * the RAREST required term's postings — never a corpus scan; a required
-    * term absent from the corpus short-circuits to an empty result on the
-    * driver. The term predicate is pushed to the parquet block scan like
-    * every other query path.
+    * It is the term evaluator at m = n: a required term absent from the
+    * corpus empties the result before any scan, and per shard the block-max
+    * WAND loop prunes on the k-th score like the disjunctive path does,
+    * besides skipping blocks on maxDocId metadata without decoding.
     */
   def conjunctiveTopK(
       spark: SparkSession,
@@ -321,43 +346,11 @@ object QueryEngine {
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
   ): DataFrame = {
-    import spark.implicits._
     val (posText, negRaw) = parseBoolean(query)
     val analyzed = Analyzer.analyzeQuery(posText, cfg.analyzer)
-    if (analyzed.isEmpty) return emptyScores(spark)
     val negTerms = negRaw.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
-    val allNames = (analyzed.map(_._1) ++ negTerms).distinct
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(allNames: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    // AND semantics: a required term with no postings means no document
-    // can match — unlike WAND, absent terms are not dropped
-    if (analyzed.exists { case (t, _) => !idfs.contains(t) })
-      return emptyScores(spark)
-    val qts = analyzed.map { case (t, qtf) => QTerm(t, qtf * idfs(t)) }.sortBy(_.term)
-    // an excluded term with no postings excludes nothing
-    val excl = negTerms.filter(idfs.contains)
-    val scanNames = (qts.map(_.term) ++ excl).distinct
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val qtsB = spark.sparkContext.broadcast(qts)
-    val exclB = spark.sparkContext.broadcast(excl)
-    val tsB = tombstones.broadcastVia(spark)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    scoringBlocks(blocks)
-      .filter($"term".isin(scanNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        ConjunctiveScorer.scorePartition(it.buffered, qtsB.value, exclB.value,
-          kk, p.k1, p.b, avgdl, tsB.value)
-      }
-      .toDF("docId", "score")
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
+    termTopK(spark, blocks, termStats, corpus,
+      TermSpec("", analyzed, analyzed.size, negTerms), k, cfg, tombstones)
   }
 
   /** Shared by [[prefixTopK]] and its oracle builder: wildcard tokens
@@ -386,27 +379,12 @@ object QueryEngine {
       .flatMap(t => Analyzer.tokenize(t, Analyzer.noStopwords).lastOption)
       .groupBy(identity).view.mapValues(_.size).toSeq.sortBy(_._1)
 
-  /** Expand trailing-`*` stems against the term dictionary in ONE Spark
-    * job — a union of per-prefix capped scans, each with its
-    * StringStartsWith predicate pushed to the termstats parquet (round 4
-    * issued one collect per wildcard token, paying the scheduler floor per
-    * token). The [[PrefixExpansionCap]] applies per prefix in ascending
-    * term order, exactly as before.
-    */
-  private def expandPrefixes(
-      spark: SparkSession,
-      termStats: Dataset[TermStat],
-      prefixes: Seq[(String, Int)]): Seq[(String, Int)] = {
-    val byStem = expandStems(spark, termStats, prefixes.map(_._1))
-    prefixes.flatMap { case (p, qtf) =>
-      byStem.getOrElse(p, Nil).map(_ -> qtf)
-    }
-  }
-
   /** The one dictionary scan behind every wildcard expansion: per-stem
-    * capped term lists, all stems in ONE job (union of predicate-pushed
-    * capped scans). Shared by the single-query paths and [[searchBatch]],
-    * which expands every query's stems together.
+    * term lists capped at [[PrefixExpansionCap]] in ascending term order,
+    * all stems in ONE job (a union of scans, each with its
+    * StringStartsWith predicate pushed to the termstats parquet). Shared by
+    * the single-query paths and [[searchBatch]], which expands every
+    * query's stems together.
     */
   private def expandStems(
       spark: SparkSession,
@@ -431,6 +409,12 @@ object QueryEngine {
     */
   val PrefixExpansionCap = 1024
 
+  /** One weight per distinct term: a term typed AND matched by a wildcard
+    * sums its occurrences.
+    */
+  private def mergeWeights(terms: Seq[(String, Int)]): Seq[(String, Int)] =
+    terms.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+
   /** Prefix/wildcard top-k: query tokens ending in `*` expand against the
     * term dictionary (Lucene MultiTermQuery, SCORING_BOOLEAN rewrite) and
     * the whole query then runs as ordinary disjunctive WAND over the
@@ -450,34 +434,22 @@ object QueryEngine {
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
   ): DataFrame = {
-    import spark.implicits._
     val (literal, prefixes) = parsePrefixQuery(query, cfg)
-    if (literal.isEmpty && prefixes.isEmpty) return emptyScores(spark)
-    val expanded: Seq[(String, Int)] = expandPrefixes(spark, termStats, prefixes)
-    // one weight per distinct term: literal + expansion occurrences sum
-    val combined: Seq[(String, Int)] = (literal ++ expanded)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    if (combined.isEmpty) return emptyScores(spark)
-    val q = combined.map { case (t, n) => Seq.fill(n)(t) }.flatten.mkString(" ")
-    // delegate to WAND: analyzeQuery over the synthesized token stream
-    // reproduces exactly the combined (term, qtf) weights
-    wandTopK(spark, blocks, termStats, corpus, q, k, cfg, tombstones)
+    val byStem = expandStems(spark, termStats, prefixes.map(_._1))
+    val expanded = prefixes.flatMap { case (p, qtf) => byStem.getOrElse(p, Nil).map(_ -> qtf) }
+    termTopK(spark, blocks, termStats, corpus,
+      TermSpec("", mergeWeights(literal ++ expanded), 1), k, cfg, tombstones)
   }
 
   /** Minimum-should-match top-k (Lucene BooleanQuery.minimumShouldMatch):
     * documents containing at least `m` of the query's distinct analyzed
     * terms qualify, ranked by BM25 over the terms they contain. m = 1 is
-    * disjunctive top-k (rank-identical to [[wandTopK]], property-tested);
-    * m = n is conjunctive AND ([[conjunctiveTopK]] without exclusions).
+    * [[wandTopK]], m = n is [[conjunctiveTopK]] without exclusions.
     *
     * A query term absent from the corpus can never match, so it lowers
     * the achievable count: if fewer than m terms have postings the result
-    * is empty (Lucene's SHOULD-clause semantics). Per shard the scorer is
-    * a document-at-a-time merge over the term cursors — work is bounded
-    * by the UNION of the query terms' postings, the same bound WAND has
-    * before its skipping; msm < n forfeits WAND pruning because a doc's
-    * eligibility depends on its match COUNT, which upper bounds can't
-    * prove absent.
+    * is empty (Lucene's SHOULD-clause semantics). Per shard it runs the
+    * block-max WAND loop with the pivot held at the m-th cursor or later.
     */
   def minShouldMatchTopK(
       spark: SparkSession,
@@ -488,212 +460,11 @@ object QueryEngine {
       m: Int,
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty,
-      excluded: Seq[String] = Nil
+      tombstones: TombstoneSet = TombstoneSet.empty
   ): DataFrame = {
-    import spark.implicits._
     require(m >= 1, s"minimumShouldMatch must be >= 1, got $m")
-    val analyzed = Analyzer.analyzeQuery(query, cfg.analyzer)
-    if (analyzed.isEmpty) return emptyScores(spark)
-    val negTerms = excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
-    val allNames = (analyzed.map(_._1) ++ negTerms).distinct
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(allNames: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    val qts = analyzed.collect {
-      case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
-    }.sortBy(_.term)
-    // fewer live terms than m => no document can reach the threshold
-    if (qts.size < m) return emptyScores(spark)
-    // an excluded term with no postings excludes nothing
-    val excl = negTerms.filter(idfs.contains)
-    val scanNames = (qts.map(_.term) ++ excl).distinct
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val mm = m
-    val qtsB = spark.sparkContext.broadcast(qts)
-    val exclB = spark.sparkContext.broadcast(excl)
-    val tsB = tombstones.broadcastVia(spark)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    scoringBlocks(blocks)
-      .filter($"term".isin(scanNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        MsmScorer.scorePartition(it.buffered, qtsB.value, exclB.value, mm, kk,
-          p.k1, p.b, avgdl, tsB.value)
-      }
-      .toDF("docId", "score")
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
-  }
-
-  /** m-of-n doc-at-a-time merge + BM25 scoring per shard. */
-  private[query] object MsmScorer {
-    import WandScorer.Cursor
-
-    /** Rows must arrive sorted by (shardId, term, minDocId). */
-    def scorePartition(
-        it: BufferedIterator[PostingBlock],
-        qts: Seq[QTerm],
-        excluded: Seq[String],
-        m: Int,
-        k: Int,
-        k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet
-    ): Iterator[(Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      while (it.hasNext) {
-        val byTerm = nextShardGroup(it)
-        // qts is term-sorted, so iterating cursors in build order pins
-        // the ascending-term summation order
-        val cursors = qts.flatMap { q =>
-          byTerm.get(q.term).map(bs =>
-            new Cursor(q.term, q.weight, bs.sortBy(_.minDocId).toArray, k1, b, avgdl))
-        }.toArray
-        val not = excluded.flatMap(t => byTerm.get(t).map(bs =>
-          new Cursor(t, 0.0, bs.sortBy(_.minDocId).toArray, k1, b, avgdl))).toArray
-        if (cursors.length >= m) out ++= mergeShard(cursors, not, m, k, tombstones)
-      }
-      out.iterator
-    }
-
-    private def mergeShard(cursors: Array[Cursor], not: Array[Cursor], m: Int,
-        k: Int, tombstones: TombstoneSet): Seq[(Long, Double)] = {
-      val heap = new TopKHeap(k)
-      var liveCount = cursors.count(!_.exhausted)
-      while (liveCount >= m) {
-        // current minimum docId across live cursors
-        var minDoc = Long.MaxValue
-        var i = 0
-        while (i < cursors.length) {
-          if (!cursors(i).exhausted && cursors(i).curDoc < minDoc)
-            minDoc = cursors(i).curDoc
-          i += 1
-        }
-        // count + score the cursors sitting on it (ascending term order)
-        var dead = tombstones.contains(minDoc)
-        var matched = 0
-        var score = 0.0
-        var j = 0
-        while (j < cursors.length) {
-          if (!cursors(j).exhausted && cursors(j).curDoc == minDoc) {
-            matched += 1
-            if (!dead) score += cursors(j).currentContribution()
-          }
-          j += 1
-        }
-        // exclusion cursors skip forward lazily: minDoc is monotone within
-        // a shard, so each advanceTo is amortized over the merge
-        if (!dead && matched >= m) {
-          var x = 0
-          while (x < not.length && !dead) {
-            if (!not(x).exhausted) {
-              not(x).advanceTo(minDoc)
-              if (!not(x).exhausted && not(x).curDoc == minDoc) dead = true
-            }
-            x += 1
-          }
-        }
-        if (!dead && matched >= m) heap.offer(minDoc, score)
-        var a = 0
-        while (a < cursors.length) {
-          if (!cursors(a).exhausted && cursors(a).curDoc == minDoc) cursors(a).advance()
-          a += 1
-        }
-        liveCount = cursors.count(!_.exhausted)
-      }
-      heap.drain()
-    }
-  }
-
-  /** All-terms-required intersect + BM25 scoring per shard. */
-  private[query] object ConjunctiveScorer {
-    import WandScorer.Cursor
-
-    /** Rows must arrive sorted by (shardId, term, minDocId). */
-    def scorePartition(
-        it: BufferedIterator[PostingBlock],
-        qts: Seq[QTerm],
-        excluded: Seq[String],
-        k: Int,
-        k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet = TombstoneSet.empty
-    ): Iterator[(Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      while (it.hasNext) {
-        val byTerm = nextShardGroup(it)
-        // docId-sharding co-locates a doc's postings: a match needs every
-        // required term present in this shard
-        if (qts.forall(q => byTerm.contains(q.term))) {
-          // qts is term-sorted, so contributions sum in ascending term
-          // order — the pinned summation order of every scoring path
-          val req = qts.map(q => new Cursor(q.term, q.weight,
-            byTerm(q.term).sortBy(_.minDocId).toArray, k1, b, avgdl)).toArray
-          val not = excluded.flatMap(t => byTerm.get(t).map(bs =>
-            new Cursor(t, 0.0, bs.sortBy(_.minDocId).toArray, k1, b, avgdl))).toArray
-          out ++= intersectShard(req, not, k, tombstones)
-        }
-      }
-      out.iterator
-    }
-
-    /** Leapfrog intersect over the required cursors; heap top-k under the
-      * global tie-break (score desc, docId asc).
-      */
-    private def intersectShard(req: Array[Cursor], not: Array[Cursor],
-        k: Int, tombstones: TombstoneSet): Seq[(Long, Double)] = {
-      val heap = new TopKHeap(k)
-      var done = false
-      while (!done) {
-        var target = Long.MinValue
-        var i = 0
-        while (i < req.length && !done) {
-          if (req(i).exhausted) done = true
-          else if (req(i).curDoc > target) target = req(i).curDoc
-          i += 1
-        }
-        if (!done) {
-          var aligned = true
-          var j = 0
-          while (j < req.length && !done) {
-            if (req(j).curDoc < target) {
-              req(j).advanceTo(target)
-              if (req(j).exhausted) done = true
-              else if (req(j).curDoc != target) aligned = false
-            }
-            j += 1
-          }
-          if (!done && aligned) {
-            var dropped = tombstones.contains(target)
-            var x = 0
-            while (x < not.length && !dropped) {
-              if (!not(x).exhausted) {
-                not(x).advanceTo(target)
-                if (!not(x).exhausted && not(x).curDoc == target) dropped = true
-              }
-              x += 1
-            }
-            if (!dropped) {
-              var score = 0.0
-              var m = 0
-              while (m < req.length) { score += req(m).currentContribution(); m += 1 }
-              heap.offer(target, score)
-            }
-            var a = 0
-            while (a < req.length && !done) {
-              req(a).advance()
-              if (req(a).exhausted) done = true
-              a += 1
-            }
-          }
-        }
-      }
-      heap.drain()
-    }
+    termTopK(spark, blocks, termStats, corpus,
+      TermSpec("", Analyzer.analyzeQuery(query, cfg.analyzer), m), k, cfg, tombstones)
   }
 
   // ------------------------------------------------- unified search box
@@ -771,13 +542,16 @@ object QueryEngine {
     * PhraseQuery scoring — the phrase as a single term (tf = occurrence
     * count, idf over the phrase df) — exactly [[phraseTopK]].
     *
-    * Routing (each single-feature query runs the scorer it always had —
-    * property-tested identical in SearchSpec):
-    *   - plain terms, m=1            → [[wandTopK]] (block-max WAND)
-    *   - plain terms, m=n (or -term) → [[conjunctiveTopK]] (leapfrog AND)
-    *   - plain terms, 1<m<n          → [[minShouldMatchTopK]]
-    *   - `tok*` anywhere             → dictionary expansion (one capped,
-    *                                   predicate-pushed scan) into the above
+    * Routing (property-tested against a scalar oracle in SearchSpec):
+    *   - no phrase, no `field:value` → the one term evaluator: block-max
+    *                                   WAND over the positive terms with
+    *                                   minimum-should-match m and the
+    *                                   `-term` exclusions checked lazily per
+    *                                   candidate. Plain (m=1), AND (m=n),
+    *                                   m-of-n and `-term` queries all run
+    *                                   it, so AND is block-max pruned too;
+    *                                   `tok*` stems expand first (one
+    *                                   capped, predicate-pushed scan)
     *   - lone `"phrase"~s`           → [[phraseTopK]]
     *   - `"phrase"` + free terms     → [[phraseFilterRank]]
     *   - any other mix               → [[composedTopK]] (phrase survivors
@@ -815,42 +589,14 @@ object QueryEngine {
       docs: Option[DataFrame] = None
   ): DataFrame = {
     require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
-    val pq0 = parseQuery(query)
-    // forgiveness for accidental colons (Lucene-style search boxes see
-    // URLs, 're:deploy', field typos): only tokens naming an ACTUAL doc
-    // metadata column act as filters; the rest fall back to plain text
-    // ('http://x' searches the terms http/x instead of crashing on an
-    // unresolved column)
-    // without a docs relation the metadata columns are unknowable, so only
-    // the transcript schema's documented filterable fields count as field
-    // queries there — a stray 'http://x' or 're:deploy' falls back to free
-    // text instead of crashing the docs-less serving path (ADVICE r5: one
-    // such token used to throw and fail a whole searchBatch)
-    val (knownFields, strayFields) = docs match {
-      case Some(d) => pq0.fields.partition { case (f, _) => d.columns.contains(f) }
-      case None => pq0.fields.partition { case (f, _) => MetadataFields.contains(f) }
-    }
-    if (knownFields.nonEmpty && docs.isEmpty)
-      throw new IllegalArgumentException(
-        s"query [$query] has field predicates ${knownFields.map(f => f._1 + ":" + f._2)} " +
-          "— pass the docs relation")
-    val pq = pq0.copy(
-      free = pq0.free ++ strayFields.map { case (f, v) => s"$f $v" },
-      fields = knownFields)
+    val pq = parseResolved(query, docs)
     val fieldFilter: Option[DataFrame] = if (pq.fields.isEmpty) None else {
       val d = docs.get
       Some(pq.fields.foldLeft(d) { case (acc, (f, v)) => acc.filter(col(f) === v) }
         .select(col("docId")))
     }
-    val stems = analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
-    val expanded = expandPrefixes(spark, termStats, stems)
-    val literal = Analyzer.analyzeQuery(
-      (pq.free ++ pq.phrases.map(_._1)).mkString(" "), cfg.analyzer)
-    // one weight per distinct positive term; a term typed AND matched by a
-    // wildcard sums its occurrences, like prefixTopK
-    val positive = (literal ++ expanded)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    val excl = pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
+    val (positive, excl) =
+      termWeights(pq, expandStems(spark, termStats, stemsOf(pq).map(_._1)), cfg)
     val m = minShouldMatch
     // a filter-only query ('role:user', no scoring terms) is a match-all
     // under the filter: constant score 0, docId order — Lucene's
@@ -879,23 +625,13 @@ object QueryEngine {
     }
     // more required matches than distinct positive terms is unsatisfiable
     if (positive.isEmpty || m > positive.size) return emptyScores(spark)
-    // re-synthesized token stream carrying the exact (term, qtf) weights
-    // for the query-text-taking dedicated APIs (analysis is idempotent on
-    // analyzed terms)
-    def posText = positive.flatMap { case (t, n) => Seq.fill(n)(t) }.mkString(" ")
 
     if (fieldFilter.nonEmpty) {
       composedTopK(spark, blocks, termStats, corpus, positive, pq.phrases, excl,
         m, k, cfg, tombstones, fieldFilter)
     } else if (pq.phrases.isEmpty) {
-      if (excl.isEmpty && m == 1)
-        wandTopK(spark, blocks, termStats, corpus, posText, k, cfg, tombstones)
-      else if (m == positive.size)
-        conjunctiveTopK(spark, blocks, termStats, corpus,
-          (posText +: excl.map("-" + _)).mkString(" "), k, cfg, tombstones)
-      else
-        minShouldMatchTopK(spark, blocks, termStats, corpus, posText, m, k, cfg,
-          tombstones, excl)
+      termTopK(spark, blocks, termStats, corpus, TermSpec("", positive, m, excl), k, cfg,
+        tombstones)
     } else if (pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty &&
         excl.isEmpty) {
       // a phrase match contains every phrase word, so any satisfiable m is
@@ -912,15 +648,57 @@ object QueryEngine {
     }
   }
 
+  /** Forgiveness for accidental colons (Lucene-style search boxes see
+    * URLs, 're:deploy', field typos): only tokens naming an ACTUAL doc
+    * metadata column act as filters; the rest fall back to free text
+    * ('http://x' searches the terms http/x instead of crashing on an
+    * unresolved column). Without a docs relation the metadata columns are
+    * unknowable, so only the transcript schema's fields count there — a
+    * stray 'http://x' falls back to free text instead of crashing the
+    * docs-less serving path, and a real field throws the pass-the-docs
+    * contract error.
+    */
+  private def parseResolved(query: String, docs: Option[DataFrame]): ParsedQuery = {
+    val pq = parseQuery(query)
+    val (knownFields, strayFields) = docs match {
+      case Some(d) => pq.fields.partition { case (f, _) => d.columns.contains(f) }
+      case None => pq.fields.partition { case (f, _) => MetadataFields.contains(f) }
+    }
+    if (knownFields.nonEmpty && docs.isEmpty)
+      throw new IllegalArgumentException(
+        s"query [$query] has field predicates ${knownFields.map(f => f._1 + ":" + f._2)} " +
+          "— pass the docs relation")
+    pq.copy(free = pq.free ++ strayFields.map { case (f, v) => s"$f $v" }, fields = knownFields)
+  }
+
+  /** The analyzed wildcard stems of a parsed query, with their counts. */
+  private def stemsOf(pq: ParsedQuery): Seq[(String, Int)] =
+    analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
+
+  /** A parsed query's positive (term, qtf) weights — free terms, phrase
+    * words and wildcard expansions, one weight per distinct term — and its
+    * analyzed exclusions. `byStem` holds the dictionary expansion of every
+    * stem of the query ([[expandStems]]).
+    */
+  private def termWeights(pq: ParsedQuery, byStem: Map[String, Seq[String]],
+      cfg: IndexBuilder.Config): (Seq[(String, Int)], Seq[String]) = {
+    val literal = Analyzer.analyzeQuery(
+      (pq.free ++ pq.phrases.map(_._1)).mkString(" "), cfg.analyzer)
+    val expanded = stemsOf(pq).flatMap { case (p, qtf) => byStem.getOrElse(p, Nil).map(_ -> qtf) }
+    (mergeWeights(literal ++ expanded),
+      pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct)
+  }
+
   /** Batched unified search — a whole request batch through the one
-    * search-box grammar in as few jobs as possible: queries that reduce to
-    * plain disjunctive WAND after parsing (no phrases / exclusions /
-    * fields; wildcards are fine — every query's stems expand in ONE
-    * dictionary scan) share a single [[wandTopKBatch]] job (shared block
-    * scan + per-shard decode memo, the measured ~3× amortization of the
-    * per-job scheduler floor); the rest run their routed plans and union
-    * in. Returns (qid, docId, score), per-qid top-k, each qid identical to
-    * a [[search]] call with the same text (property-tested).
+    * search-box grammar in as few jobs as possible: every phrase-free,
+    * field-free query (plain, AND, `-term`, m-of-n, wildcards — every
+    * query's stems expand in ONE dictionary scan) is a term query, and
+    * all of them share ONE scoring job of the term evaluator (one idf
+    * collect, shared block scan + per-shard decode memo, the measured ~3×
+    * amortization of the per-job scheduler floor); phrase and fielded
+    * queries run their routed plans and union in. Returns (qid, docId,
+    * score), per-qid top-k, each qid identical to a [[search]] call with
+    * the same text (property-tested).
     *
     * `minShouldMatch` applies to every query in the batch (callers with
     * per-query msm issue those queries separately).
@@ -938,50 +716,25 @@ object QueryEngine {
       docs: Option[DataFrame] = None
   ): DataFrame = {
     import spark.implicits._
-    // duplicate qids would silently cross-wire the per-qid stems map and
-    // merge two queries' candidates under one window partition
+    require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
+    // duplicate qids would merge two queries' candidates under one window
+    // partition
     require(queries.map(_._1).distinct.size == queries.size,
       s"duplicate qids in batch: ${queries.map(_._1)}")
-    def empty: DataFrame =
-      spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score")
-    // stray colon tokens (URLs, field typos) are classified EXACTLY like
-    // search() does before routing, so a query that search() would degrade
-    // to plain free text stays in the shared WAND batch instead of paying
-    // an individual job for a cosmetic token
-    val parsed = queries.map { case (qid, q) =>
-      val pq0 = parseQuery(q)
-      val (knownFields, strayFields) = docs match {
-        case Some(d) => pq0.fields.partition { case (f, _) => d.columns.contains(f) }
-        case None => pq0.fields.partition { case (f, _) => MetadataFields.contains(f) }
-      }
-      (qid, q, pq0.copy(
-        free = pq0.free ++ strayFields.map { case (f, v) => s"$f $v" },
-        fields = knownFields))
+    // stray colon tokens are classified EXACTLY like search() does, so a
+    // query that search() would degrade to free text stays in the shared
+    // job instead of paying an individual one for a cosmetic token
+    val parsed = queries.map { case (qid, q) => (qid, q, parseResolved(q, docs)) }
+    val (terms, other) = parsed.partition { case (_, _, pq) =>
+      pq.phrases.isEmpty && pq.fields.isEmpty
     }
-    val (plain, other) =
-      if (minShouldMatch == 1)
-        parsed.partition { case (_, _, pq) =>
-          pq.phrases.isEmpty && pq.excluded.isEmpty && pq.fields.isEmpty
-        }
-      else (Nil, parsed)
-    // every plain query's wildcard stems expand in one dictionary scan
-    val stems: Map[String, Seq[(String, Int)]] = plain.map { case (qid, _, pq) =>
-      qid -> analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
-    }.toMap
-    val byStem = expandStems(spark, termStats, stems.values.flatten.map(_._1).toSeq)
-    val plainTexts: Seq[(String, String)] = plain.flatMap { case (qid, _, pq) =>
-      val expanded = stems(qid).flatMap { case (p, qtf) =>
-        byStem.getOrElse(p, Nil).map(_ -> qtf)
-      }
-      val positive = (Analyzer.analyzeQuery(pq.free.mkString(" "), cfg.analyzer) ++
-        expanded).groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-      if (positive.isEmpty) None
-      else Some(qid -> positive.flatMap { case (t, n) => Seq.fill(n)(t) }.mkString(" "))
+    val byStem = expandStems(spark, termStats,
+      terms.flatMap { case (_, _, pq) => stemsOf(pq).map(_._1) })
+    val specs = terms.map { case (qid, _, pq) =>
+      val (positive, excl) = termWeights(pq, byStem, cfg)
+      TermSpec(qid, positive, minShouldMatch, excl)
     }
-    val batched =
-      if (plainTexts.isEmpty) empty
-      else wandTopKBatch(spark, blocks, termStats, corpus, plainTexts, k, cfg,
-        tombstones)
+    val batched = termTopKBatch(spark, blocks, termStats, corpus, specs, k, cfg, tombstones)
     other.foldLeft(batched) { case (acc, (qid, q, _)) =>
       acc.unionByName(
         search(spark, blocks, termStats, corpus, q, k, minShouldMatch, cfg,
@@ -1392,7 +1145,10 @@ object QueryEngine {
     }
   }
 
-  /** Document-at-a-time WAND, one shard at a time within a partition. */
+  /** The one per-shard term loop: document-at-a-time block-max WAND with
+    * minimum-should-match and lazily checked exclusions, one shard at a
+    * time within a partition.
+    */
   private[query] object WandScorer {
 
     final class Cursor(val term: String, val weight: Double,
@@ -1454,24 +1210,14 @@ object QueryEngine {
       }
     }
 
-    /** Rows must arrive sorted by (shardId, term, minDocId). */
+    /** Rows must arrive sorted by (shardId, term, minDocId). Every query
+      * is scored against each shard group while its blocks are at hand.
+      * Decoded blocks are memoized per shard, so a block shared by several
+      * queries is decoded once.
+      */
     def scorePartition(
         it: BufferedIterator[PostingBlock],
-        qts: Seq[QTerm],
-        k: Int,
-        k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet = TombstoneSet.empty
-    ): Iterator[(Long, Double)] =
-      scorePartitionBatch(it, Seq("" -> qts), k, k1, b, avgdl, tombstones)
-        .map { case (_, d, s) => (d, s) }
-
-    /** Batch variant: every query scored against each shard group while
-      * its blocks are at hand. Decoded blocks are memoized per shard, so a
-      * block shared by several queries is decoded once.
-      */
-    def scorePartitionBatch(
-        it: BufferedIterator[PostingBlock],
-        queries: Seq[(String, Seq[QTerm])],
+        queries: Seq[(String, TermQuery)],
         k: Int,
         k1: Double, b: Double, avgdl: Double,
         tombstones: TombstoneSet = TombstoneSet.empty
@@ -1487,43 +1233,57 @@ object QueryEngine {
         val memo = scala.collection.mutable.HashMap.empty[(String, Long), Array[Codec.P]]
         val decode: PostingBlock => Array[Codec.P] = blk =>
           memo.getOrElseUpdate((blk.term, blk.minDocId), Codec.decode(blk.payload, blk.n))
-        queries.foreach { case (qid, qts) =>
-          val cursors = qts.flatMap { qt =>
-            sortedByTerm.get(qt.term).map { bs =>
-              new Cursor(qt.term, qt.weight, bs, k1, b, avgdl, decode)
-            }
-          }
-          if (cursors.nonEmpty)
-            out ++= wandShard(cursors.toArray, k, tombstones)
+        def cursor(term: String, weight: Double): Option[Cursor] =
+          sortedByTerm.get(term).map(new Cursor(term, weight, _, k1, b, avgdl, decode))
+        queries.foreach { case (qid, q) =>
+          // q.should is term-sorted, which pins the ascending-term order
+          // the cursors' contributions are summed in
+          val should = q.should.flatMap(qt => cursor(qt.term, qt.weight)).toArray
+          // docId-sharding co-locates a doc's postings: a shard holding
+          // fewer than m of the SHOULD terms has no match
+          if (should.length >= q.m) {
+            val mustNot = q.mustNot.flatMap(cursor(_, 0.0)).toArray
+            out ++= wandShard(should, q.m, mustNot, k, tombstones)
               .map { case (d, s) => (qid, d, s) }
+          }
         }
       }
       out.iterator
     }
 
-    /** Plain WAND pivot selection on global term upper bounds, with a
-      * block-max refinement: once a pivot is chosen, the sum of the
-      * *current-block* upper bounds must still beat the threshold or the
-      * pivot is skipped without decoding/scoring (Ding & Suel's BMW).
-      * Threshold semantics respect the global tie-break
-      * (score desc, docId asc): within a shard docIds only grow, so a
-      * candidate whose upper bound is <= θ can never displace a heap entry.
+    /** Block-max WAND (Ding & Suel) generalized to minimum-should-match,
+      * the way Lucene's WANDScorer handles minShouldMatch: the pivot is the
+      * first cursor index i >= m-1 (cursors sorted by docId) whose prefix
+      * sum of global upper bounds beats the threshold θ. A doc before the
+      * pivot either sits under fewer than m cursors or cannot beat θ. Once
+      * the pivot doc is reached by every cursor in front of it, the sum of
+      * their *current-block* upper bounds must still beat θ, or the doc is
+      * skipped without scoring. Only a doc that passes is checked against
+      * the MUST_NOT cursors, which advance lazily (pivot docs only grow).
+      * θ respects the global tie-break (score desc, docId asc): within a
+      * shard docIds only grow, so a candidate whose upper bound is <= θ can
+      * never displace a heap entry.
+      *
+      * m = 1 with no exclusions is plain BMW; m = n is AND.
       */
-    private def wandShard(cursors: Array[Cursor], k: Int,
-        tombstones: TombstoneSet = TombstoneSet.empty): Seq[(Long, Double)] = {
+    private def wandShard(cursors: Array[Cursor], m: Int, mustNot: Array[Cursor], k: Int,
+        tombstones: TombstoneSet): Seq[(Long, Double)] = {
       val heap = new TopKHeap(k)
-      def theta: Double = heap.theta
+      def excluded(doc: Long): Boolean = mustNot.exists { c =>
+        c.advanceTo(doc)
+        !c.exhausted && c.curDoc == doc
+      }
 
       val live = scala.collection.mutable.ArrayBuffer(cursors.toIndexedSeq: _*)
-      while (live.nonEmpty) {
+      while (live.length >= m) {
         val sorted = live.sortBy(_.curDoc)
-        // pivot: first position where the prefix upper-bound sum beats theta
+        val theta = heap.theta
         var acc = 0.0
         var pivotIdx = -1
         var i = 0
         while (i < sorted.length && pivotIdx < 0) {
           acc += sorted(i).globalUb
-          if (acc > theta) pivotIdx = i
+          if (i >= m - 1 && acc > theta) pivotIdx = i
           i += 1
         }
         if (pivotIdx < 0) {
@@ -1539,29 +1299,22 @@ object QueryEngine {
           while (pivotIdx + 1 < sorted.length && sorted(pivotIdx + 1).curDoc == pivotDoc)
             pivotIdx += 1
           if (sorted.head.curDoc == pivotDoc) {
-            // tombstoned (deleted) docs are skipped exactly like a failed
-            // block-max bound: never scored, never a heap slot
-            val dead = tombstones.contains(pivotDoc)
-            // block-max refinement: tighten with current-block ubs
+            // sorted(0..pivotIdx) all sit on pivotDoc: pivotIdx + 1 >= m
+            // matches. Tombstoned (deleted) docs are skipped exactly like a
+            // failed block-max bound: never scored, never a heap slot
+            val matching = sorted.take(pivotIdx + 1).toArray
             var blockAcc = 0.0
             var j = 0
-            while (j <= pivotIdx) { blockAcc += sorted(j).curBlockUb; j += 1 }
-            if (!dead && blockAcc > theta) {
-              // score pivotDoc exactly, ascending term order (cursors were
-              // built term-sorted; sortBy on curDoc is stable, but re-sort
-              // the matching set by term to pin summation order)
-              val matching = sorted.iterator
-                .takeWhile(_.curDoc == pivotDoc).toArray.sortBy(_.term)
+            while (j < matching.length) { blockAcc += matching(j).curBlockUb; j += 1 }
+            if (blockAcc > theta && !tombstones.contains(pivotDoc) && !excluded(pivotDoc)) {
+              // score pivotDoc exactly, ascending term order
+              val byTerm = matching.sortBy(_.term)
               var score = 0.0
-              var m = 0
-              while (m < matching.length) { score += matching(m).currentContribution(); m += 1 }
+              var s = 0
+              while (s < byTerm.length) { score += byTerm(s).currentContribution(); s += 1 }
               heap.offer(pivotDoc, score)
-              matching.foreach(_.advance())
-            } else {
-              // skip: advance every cursor sitting on pivotDoc past it
-              sorted.iterator.takeWhile(_.curDoc == pivotDoc)
-                .foreach(_.advanceTo(pivotDoc + 1))
             }
+            matching.foreach(_.advance())
           } else {
             // advance a lagging cursor. It MUST be one with curDoc strictly
             // below the pivot (cursors at indices < pivotIdx can already sit

@@ -66,7 +66,7 @@ class SearchSpec extends AnyFunSuite {
     assert(searchTop(idx, "term0002 \"term0000 term0001\"") ==
       rows(QueryEngine.phraseFilterRank(spark, b, ts, c, "term0002",
         "term0000 term0001", 10, cfg)))
-    // m = n (with exclusion) -> conjunctive leapfrog
+    // m = n (with exclusion) -> the term evaluator as AND
     assert(searchTop(idx, "term0000 term0001 -term0002", m = 2) ==
       rows(QueryEngine.conjunctiveTopK(spark, b, ts, c,
         "term0000 term0001 -term0002", 10, cfg)))
@@ -331,23 +331,50 @@ class SearchSpec extends AnyFunSuite {
     val idx = buildIndex(turns, "graft-search-batch")
     val docsDf = Some(idx.docs.toDF())
     val batch = Seq(
-      "b1" -> "term0000 term0001 term0002", // plain -> shared WAND job
+      "b1" -> "term0000 term0001 term0002", // plain -> shared term job
       "b2" -> "term000* term0042", // wildcard -> expanded into the batch
       "b3" -> "\"term0000 term0001\" term0002 -term0005", // composed
       "b4" -> "role:user term0000 term0001", // fielded
-      "b5" -> "zzznotaterm") // empty result
-    val got = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
-      batch, 10, 1, cfg, graft.index.TombstoneSet.empty, docsDf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
-    var nonEmpty = 0
-    batch.foreach { case (qid, q) =>
-      val single = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
-        idx.corpus, q, 10, 1, cfg, graft.index.TombstoneSet.empty, docsDf))
-      assert(got.getOrElse(qid, Nil) == single, s"batch/single mismatch for $qid [$q]")
-      if (single.nonEmpty) nonEmpty += 1
+      "b5" -> "zzznotaterm", // empty result
+      "b6" -> "term0000 term0002 term0003 -term0001") // -term -> shared term job
+    Seq(1, 2).foreach { m =>
+      val got = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+        batch, 10, m, cfg, graft.index.TombstoneSet.empty, docsDf)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
+      var nonEmpty = 0
+      batch.foreach { case (qid, q) =>
+        val single = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
+          idx.corpus, q, 10, m, cfg, graft.index.TombstoneSet.empty, docsDf))
+        assert(got.getOrElse(qid, Nil) == single, s"batch/single mismatch for $qid [$q] m=$m")
+        if (single.nonEmpty) nonEmpty += 1
+      }
+      assert(nonEmpty >= 4, s"batch fixtures mostly empty at m=$m — vacuous")
     }
-    assert(nonEmpty >= 4, "batch fixtures mostly empty — vacuous")
+  }
+
+  test("searchBatch: -term queries share the one scoring job") {
+    val turns = TranscriptGen.turns(seed = 128, nConvs = 30)
+    val idx = buildIndex(turns, "graft-search-batch-jobs")
+    val sc = spark.sparkContext
+    def jobs(group: String, qs: Seq[(String, String)]): Int = {
+      sc.setJobGroup(group, group)
+      try {
+        val hits = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+          qs, 10, 1, cfg).collect()
+        assert(hits.map(_.getString(0)).distinct.length == qs.size, s"vacuous batch $qs")
+      } finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val four = Seq(
+      "n1" -> "term0000 term0001 -term0002",
+      "n2" -> "term0003 -term0000",
+      "n3" -> "term0001 term0004 -term0005 -term0006",
+      "n4" -> "term0002 term0000 -term0003")
+    val one = jobs("graft-batch-jobs-one", four.take(1))
+    val all = jobs("graft-batch-jobs-four", four)
+    assert(one > 0, "job group recorded no jobs")
+    assert(all <= one, s"a batch of four -term queries ran $all jobs, a batch of one $one")
   }
 
   test("filter-only search on a delete-carrying index never returns a tombstoned doc") {

@@ -2,15 +2,16 @@ package graft.query
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.Codec
+import graft.index.{Codec, TombstoneSet}
 import graft.index.Codec.P
 import graft.model.PostingBlock
-import graft.query.QueryEngine.{QTerm, WandScorer}
+import graft.query.QueryEngine.{QTerm, TermQuery, WandScorer}
 
-/** Direct unit tests of the block-max WAND scorer against a scalar
-  * exhaustive oracle over the SAME encoded blocks — no Spark involved, so
-  * adversarial block layouts (weak current block, docId ties at the pivot,
-  * multi-block lists) can be constructed exactly.
+/** Direct unit tests of the term evaluator (block-max WAND with
+  * minimum-should-match and exclusions) against a scalar brute force over
+  * the SAME encoded blocks — no Spark involved, so adversarial block
+  * layouts (weak current block, docId ties at the pivot, multi-block
+  * lists) can be constructed exactly.
   */
 class WandUnitSpec extends AnyFunSuite {
 
@@ -22,27 +23,36 @@ class WandUnitSpec extends AnyFunSuite {
       ps.map(_.tf).max, ps.map(_.dl).min, ps.map(_.tf.toLong).sum,
       Codec.encode(ps), Array.emptyByteArray)
 
-  /** Scalar exhaustive top-k over decoded blocks (same formula, same
-    * tie-break).
+  /** Scalar brute force over decoded blocks: a doc qualifies when it holds
+    * at least m of the SHOULD terms, none of the MUST_NOT terms and no
+    * tombstone; its score sums the same formula in ascending term order;
+    * the top-k is taken under (score desc, docId asc).
     */
-  private def exhaustive(blocks: Seq[PostingBlock], qts: Seq[QTerm], k: Int,
-      avgdl: Double): Seq[(Long, Double)] = {
-    val scores = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
-    qts.sortBy(_.term).foreach { qt =>
-      blocks.filter(_.term == qt.term).sortBy(b => (b.shardId, b.minDocId)).foreach { blkk =>
-        Codec.decode(blkk.payload, blkk.n).foreach { p =>
-          scores(p.docId) += qt.weight *
-            (p.tf * (k1 + 1.0) / (p.tf + k1 * (1.0 - b + b * p.dl / avgdl)))
+  private def bruteForce(blocks: Seq[PostingBlock], q: TermQuery, k: Int, avgdl: Double,
+      tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
+    def postings(term: String): Map[Long, P] =
+      blocks.filter(_.term == term).flatMap(bl => Codec.decode(bl.payload, bl.n))
+        .map(p => p.docId -> p).toMap
+    val should = q.should.sortBy(_.term).map(qt => qt -> postings(qt.term))
+    val banned = q.mustNot.flatMap(postings(_).keys).toSet ++ tombstones
+    val docs = should.flatMap(_._2.keys).distinct.filterNot(banned)
+    docs.filter(d => should.count(_._2.contains(d)) >= q.m).map { d =>
+      var s = 0.0
+      should.foreach { case (qt, ps) =>
+        ps.get(d).foreach { p =>
+          s += qt.weight * (p.tf * (k1 + 1.0) / (p.tf + k1 * (1.0 - b + b * p.dl / avgdl)))
         }
       }
-    }
-    scores.toSeq.sortBy { case (d, s) => (-s, d) }.take(k)
+      (d, s)
+    }.sortBy { case (d, s) => (-s, d) }.take(k)
   }
 
-  private def wand(blocks: Seq[PostingBlock], qts: Seq[QTerm], k: Int,
-      avgdl: Double): Seq[(Long, Double)] = {
+  private def evaluate(blocks: Seq[PostingBlock], q: TermQuery, k: Int, avgdl: Double,
+      tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     val sorted = blocks.sortBy(b => (b.shardId, b.term, b.minDocId))
-    WandScorer.scorePartition(sorted.iterator.buffered, qts, k, k1, b, avgdl)
+    WandScorer.scorePartition(sorted.iterator.buffered, Seq("q" -> q), k, k1, b, avgdl,
+      TombstoneSet.fromIds(tombstones.toArray))
+      .map { case (_, d, s) => (d, s) }
       .toSeq.sortBy { case (d, s) => (-s, d) }.take(k)
   }
 
@@ -58,9 +68,9 @@ class WandUnitSpec extends AnyFunSuite {
       blk(0, "a", 1, Seq(P(9, 100, 10))),
       blk(0, "b", 0, Seq(P(1, 1, 10))),
       blk(0, "b", 1, Seq(P(5, 50, 10))))
-    val qts = Seq(QTerm("a", 1.0), QTerm("b", 1.0))
-    val want = exhaustive(blocks, qts, 1, avgdl = 10.0)
-    val got = wand(blocks, qts, 1, avgdl = 10.0)
+    val q = TermQuery(Seq(QTerm("a", 1.0), QTerm("b", 1.0)), 1, Nil)
+    val want = bruteForce(blocks, q, 1, avgdl = 10.0)
+    val got = evaluate(blocks, q, 1, avgdl = 10.0)
     assert(want.head._1 == 5L, "fixture must make doc 5 the true top-1")
     assert(got == want, s"WAND dropped the tied pivot: got $got want $want")
   }
@@ -80,13 +90,86 @@ class WandUnitSpec extends AnyFunSuite {
         }
       }.filter(_.n > 0)
       if (blocks.nonEmpty) {
-        val qts = terms.map(t => QTerm(t, 0.5 + rnd.nextDouble() * 2.0))
+        val q = TermQuery(terms.map(t => QTerm(t, 0.5 + rnd.nextDouble() * 2.0)), 1, Nil)
         (1 to 3).foreach { k =>
-          val want = exhaustive(blocks, qts, k, avgdl)
-          val got = wand(blocks, qts, k, avgdl)
+          val want = bruteForce(blocks, q, k, avgdl)
+          val got = evaluate(blocks, q, k, avgdl)
           assert(got == want, s"iter=$iter k=$k: got $got want $want")
         }
       }
     }
+  }
+
+  test("m = 2: the pivot never stops before the second cursor") {
+    // a's global bound (doc 5, tf=100) alone beats theta once doc 1 fills
+    // the heap, so the first prefix index beating theta is 0. With m = 2
+    // the pivot must still be cursor 1 (b at doc 6): doc 5 holds only a
+    // and must never be scored.
+    val blocks = Seq(
+      blk(0, "a", 0, Seq(P(1, 1, 10), P(2, 1, 10), P(5, 100, 10))),
+      blk(0, "b", 0, Seq(P(1, 1, 10), P(2, 1, 10), P(6, 1, 10))))
+    val q = TermQuery(Seq(QTerm("a", 1.0), QTerm("b", 1.0)), 2, Nil)
+    val want = bruteForce(blocks, q, 1, avgdl = 10.0)
+    assert(want.map(_._1) == Seq(1L), "fixture: doc 1 is the only-and-best 2-of-2 match")
+    assert(bruteForce(blocks, q.copy(m = 1), 1, avgdl = 10.0).map(_._1) == Seq(5L),
+      "fixture: doc 5 must top an m = 1 ranking")
+    assert(evaluate(blocks, q, 1, avgdl = 10.0) == want)
+    assert(evaluate(blocks, q, 10, avgdl = 10.0) == bruteForce(blocks, q, 10, avgdl = 10.0))
+  }
+
+  test("an excluded term's only posting is the doc that would top the heap") {
+    val blocks = Seq(
+      blk(0, "a", 0, Seq(P(1, 1, 10), P(4, 50, 10))),
+      blk(0, "a", 1, Seq(P(7, 2, 10), P(9, 1, 10))),
+      blk(0, "x", 0, Seq(P(4, 1, 10))))
+    val q = TermQuery(Seq(QTerm("a", 1.0)), 1, Seq("x"))
+    assert(bruteForce(blocks, q.copy(mustNot = Nil), 1, avgdl = 10.0).map(_._1) == Seq(4L),
+      "fixture: doc 4 must top the ranking without the exclusion")
+    Seq(1, 3).foreach { k =>
+      val got = evaluate(blocks, q, k, avgdl = 10.0)
+      assert(got == bruteForce(blocks, q, k, avgdl = 10.0), s"k=$k")
+      assert(!got.exists(_._1 == 4L), s"k=$k: the excluded doc surfaced")
+    }
+  }
+
+  test("property: m-of-n with exclusions and tombstones == brute force") {
+    val rnd = new scala.util.Random(20261017L)
+    var nonEmpty = 0
+    (1 to 400).foreach { iter =>
+      val nTerms = 1 + rnd.nextInt(4)
+      val should = (0 until nTerms).map(i => s"t$i")
+      // MUST_NOT terms are separate terms or, now and then, a SHOULD term
+      val mustNot = Seq.fill(rnd.nextInt(3))(
+        if (rnd.nextInt(4) == 0) should(rnd.nextInt(nTerms)) else s"x${rnd.nextInt(2)}").distinct
+      val nShards = 1 + rnd.nextInt(3)
+      val span = 8 + rnd.nextInt(20) // docIds per shard
+      val blockSize = 1 + rnd.nextInt(3)
+      val avgdl = 8.0 + rnd.nextInt(5)
+      // every term draws from the same per-shard docId range, so docIds tie
+      // across terms; block splits differ per term
+      val blocks = (should ++ mustNot).distinct.flatMap { t =>
+        val density = 0.2 + rnd.nextDouble() * 0.6
+        (0 until nShards).flatMap { sh =>
+          val ids = (0 until span).filter(_ => rnd.nextDouble() < density)
+            .map(i => sh.toLong * span + i)
+          ids.grouped(blockSize).zipWithIndex.map { case (g, bi) =>
+            blk(sh, t, bi, g.map(id => P(id, 1 + rnd.nextInt(40), 3 + rnd.nextInt(15))))
+          }
+        }
+      }
+      val tombstones = (0L until nShards.toLong * span)
+        .filter(_ => rnd.nextDouble() < 0.1).toSet
+      // weight = qtf * idf
+      val q = TermQuery(
+        should.map(t => QTerm(t, (1 + rnd.nextInt(3)) * (0.2 + rnd.nextDouble() * 3.0))),
+        1 + rnd.nextInt(nTerms), mustNot)
+      Seq(1, 3, 10).foreach { k =>
+        val want = bruteForce(blocks, q, k, avgdl, tombstones)
+        val got = evaluate(blocks, q, k, avgdl, tombstones)
+        assert(got == want, s"iter=$iter k=$k q=$q: got $got want $want")
+        if (want.nonEmpty) nonEmpty += 1
+      }
+    }
+    assert(nonEmpty > 600, s"property mostly vacuous: $nonEmpty non-empty cases")
   }
 }
