@@ -208,9 +208,10 @@ object SparkEntry {
   private[graft] val prefixQuery: String = "dat* join"
 
   /** Unified search-box fixtures (query text, minShouldMatch) — each mixes
-    * several features so they exercise [[QueryEngine.composedTopK]], the
-    * path no dedicated API covers: slop phrase + exclusion + free terms;
-    * wildcard + phrase + free term; phrase + minimum-should-match.
+    * several features so they exercise the evaluator's per-candidate
+    * phrase and exclusion checks, which no dedicated API covers: slop
+    * phrase + exclusion + free terms; wildcard + phrase + free term;
+    * phrase + minimum-should-match.
     */
   private[graft] val mixedSet: Seq[(String, (String, Int))] = Seq(
     "q1" -> (("query \"data stream\"~2 -batch join", 1)),
@@ -334,7 +335,7 @@ object SparkEntry {
   }
 
   /** The unified search box ([[QueryEngine.search]]): full grammar in one
-    * string, routed onto the dedicated scorers or the composed plan.
+    * string, routed onto the one evaluator or the lone-phrase scorer.
     */
   private[graft] def bm25Search(s: SparkSession, dir: String, q: String,
       m: Int = 1, k: Int = 10): DataFrame = {
@@ -353,9 +354,9 @@ object SparkEntry {
     finish(top, idx.docs, k)
   }
 
-  /** Batched unified-grammar fixture: plain + wildcard queries share one
-    * WAND job; the composed and fielded ones union in — the serving shape
-    * for a request batch over the single search box.
+  /** Batched unified-grammar fixture: plain, wildcard and phrase + term
+    * queries share one evaluator job; the fielded one unions in — the
+    * serving shape for a request batch over the single search box.
     */
   private[graft] val batchSearchSet: Seq[(String, String)] = Seq(
     "s1" -> "spark join data",
@@ -722,8 +723,8 @@ object SparkEntry {
   }
 
   /** Unified search-box oracle — the composition of the per-feature oracle
-    * pieces, mirroring [[QueryEngine.search]]'s general path
-    * ([[QueryEngine.composedTopK]]): every quoted phrase filters (its
+    * pieces, mirroring [[QueryEngine.search]]'s evaluator route: every
+    * quoted phrase filters (its
     * adjacency/slop CTEs under a per-phrase suffix), exclusions drop
     * candidate docs, minimum-should-match gates on the per-doc
     * distinct-matched-term count, and ranking is the standard BM25 fold
@@ -913,8 +914,8 @@ object SparkEntry {
   private def phraseFilterRankOracleSql(freeTerms: String, phrase: String): String = {
     val pTerms = Analyzer.tokenize(phrase, cfg.analyzer)
     // same guard as phraseOracleSql: an all-stopword phrase is an empty
-    // result (engine: phraseMatches = None), never a crash while the whole
-    // oracle map is being built
+    // result (engine: an empty phrase empties the query), never a crash
+    // while the whole oracle map is being built
     if (pTerms.isEmpty)
       return s"""WITH $cteTranscripts,
                 |$cteDocs

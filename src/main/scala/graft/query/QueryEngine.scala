@@ -97,42 +97,57 @@ object QueryEngine {
   /** Query-term state passed to executors: weight = qtf * idf. */
   private[query] final case class QTerm(term: String, weight: Double)
 
-  /** A phrase-free, field-free query as the one term evaluator runs it:
-    * weighted SHOULD terms (dictionary-present, ascending term order), the
-    * minimum number `m` of them a document must contain, and MUST_NOT
-    * terms (dictionary-present). Plain queries are m = 1, AND is m = n,
-    * `-term` tokens are MUST_NOT, wildcards add SHOULD terms.
+  /** A phrase constraint: the analyzed phrase words in order (duplicates
+    * kept) and the slop of the ordered-proximity match — the [[phraseTopK]]
+    * match rule.
     */
-  private[query] final case class TermQuery(should: Seq[QTerm], m: Int, mustNot: Seq[String])
+  private[query] final case class Phrase(terms: Seq[String], slop: Int)
+
+  /** A search-box query as the one evaluator runs it: weighted SHOULD
+    * terms (dictionary-present, ascending term order), the minimum number
+    * `m` of them a document must contain, MUST_NOT terms
+    * (dictionary-present) and phrase constraints. Plain queries are m = 1,
+    * AND is m = n, `-term` tokens are MUST_NOT, wildcards add SHOULD terms,
+    * and a quoted phrase is a filter whose words are also SHOULD terms.
+    */
+  private[query] final case class TermQuery(should: Seq[QTerm], m: Int, mustNot: Seq[String],
+      phrases: Seq[Phrase] = Nil)
 
   /** A [[TermQuery]] before the dictionary lookup: analyzed (term, qtf)
-    * SHOULD terms and analyzed MUST_NOT terms.
+    * SHOULD terms, analyzed MUST_NOT terms and analyzed phrases, whose
+    * words are among the SHOULD terms.
     */
   private final case class TermSpec(qid: String, should: Seq[(String, Int)], m: Int,
-      mustNot: Seq[String] = Nil)
+      mustNot: Seq[String] = Nil, phrases: Seq[Phrase] = Nil)
 
-  /** Blocks with the positions column replaced by an empty literal: the
-    * typed Dataset[PostingBlock] deserializer would otherwise force the
-    * parquet scan to read the phrase-only positions bytes on every BM25
-    * query of a positional index (asserted away in PlanSpec).
+  /** Blocks with the positions column kept only for `phraseTerms` and
+    * replaced by an empty literal elsewhere: the typed
+    * Dataset[PostingBlock] deserializer would otherwise force the parquet
+    * scan to read the phrase-only positions bytes on every BM25 query of a
+    * positional index (asserted away in PlanSpec).
     */
-  private def scoringBlocks(blocks: Dataset[PostingBlock]): Dataset[PostingBlock] = {
+  private def scoringBlocks(blocks: Dataset[PostingBlock],
+      phraseTerms: Seq[String] = Nil): Dataset[PostingBlock] = {
     import blocks.sparkSession.implicits._
+    val none = typedLit(Array.emptyByteArray)
     blocks.toDF()
-      .withColumn("positions", typedLit(Array.emptyByteArray))
+      .withColumn("positions",
+        if (phraseTerms.isEmpty) none
+        else when($"term".isin(phraseTerms: _*), $"positions").otherwise(none))
       .as[PostingBlock]
   }
 
-  /** The one pipeline behind every term query: ONE idf collect for
-    * the whole batch, then ONE term-pushed block scan → hash repartition
-    * on shardId → (shardId, term, minDocId) sort → per-shard block-max
-    * WAND ([[WandScorer]]). Returns the per-shard top-k candidates as
-    * (qid, docId, score), or None when no query can match anything (no
-    * scan is issued then).
+  /** The one pipeline behind every search-box query but a lone phrase:
+    * ONE idf collect for the whole batch, then ONE term-pushed block scan
+    * → hash repartition on shardId → (shardId, term, minDocId) sort →
+    * per-shard block-max WAND ([[WandScorer]]). Returns the per-shard
+    * top-k candidates as (qid, docId, score), or None when no query can
+    * match anything (no scan is issued then).
     *
     * Compilation: a SHOULD term absent from the dictionary is dropped and
     * a query left with fewer than m SHOULD terms is empty; an absent
-    * MUST_NOT term excludes nothing.
+    * MUST_NOT term excludes nothing; a phrase with no analyzed word, or
+    * with a word absent from the dictionary, empties the query.
     */
   private def termCandidates(
       spark: SparkSession,
@@ -156,11 +171,18 @@ object QueryEngine {
       val should = s.should.collect {
         case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
       }.sortBy(_.term)
-      if (should.size < s.m) None
-      else Some(s.qid -> TermQuery(should, s.m, s.mustNot.filter(idfs.contains)))
+      if (should.size < s.m ||
+          s.phrases.exists(p => p.terms.isEmpty || !p.terms.forall(idfs.contains))) None
+      else {
+        // a phrase match holds every phrase word, each a SHOULD term: a
+        // higher m only prunes docs that cannot match
+        val m = s.m.max(s.phrases.flatMap(_.terms).distinct.size)
+        Some(s.qid -> TermQuery(should, m, s.mustNot.filter(idfs.contains), s.phrases))
+      }
     }
     if (compiled.isEmpty) return None
     val scanNames = compiled.flatMap { case (_, q) => q.should.map(_.term) ++ q.mustNot }.distinct
+    val phraseTerms = compiled.flatMap { case (_, q) => q.phrases.flatMap(_.terms) }.distinct
 
     val p = cfg.params
     val avgdl = corpus.avgdl
@@ -172,7 +194,7 @@ object QueryEngine {
     // together without a RangePartitioner's extra sampling job
     val parts = math.max(1, math.min(cfg.numShards,
       spark.sparkContext.defaultParallelism))
-    Some(scoringBlocks(blocks)
+    Some(scoringBlocks(blocks, phraseTerms)
       .filter($"term".isin(scanNames: _*))
       .repartition(parts, $"shardId")
       .sortWithinPartitions($"shardId", $"term", $"minDocId")
@@ -182,16 +204,25 @@ object QueryEngine {
       .toDF("qid", "docId", "score"))
   }
 
-  /** A single term query: a batch of one, finished by
+  /** A single query: a batch of one, finished by
     * orderBy(score desc, docId asc).limit(k) (planned as
-    * TakeOrderedAndProject).
+    * TakeOrderedAndProject). With a `docFilter` (docId relation) the
+    * shards keep every match (no per-shard cut, so θ stays -inf) and the
+    * candidates semi-join the filter before the finish. An executor then
+    * holds one shard's matches at a time ([[WandScorer.scorePartition]]);
+    * the semi-join and the finish are Spark operators, free to spill.
     */
   private def termTopK(spark: SparkSession, blocks: Dataset[PostingBlock],
       termStats: Dataset[TermStat], corpus: CorpusStats, spec: TermSpec, k: Int,
-      cfg: IndexBuilder.Config, tombstones: TombstoneSet): DataFrame =
-    termCandidates(spark, blocks, termStats, corpus, Seq(spec), k, cfg, tombstones)
-      .fold(emptyScores(spark))(_.select(col("docId"), col("score"))
-        .orderBy(col("score").desc, col("docId").asc).limit(k))
+      cfg: IndexBuilder.Config, tombstones: TombstoneSet,
+      docFilter: Option[DataFrame] = None): DataFrame =
+    termCandidates(spark, blocks, termStats, corpus, Seq(spec),
+      if (docFilter.isEmpty) k else Int.MaxValue, cfg, tombstones)
+      .fold(emptyScores(spark)) { c =>
+        val cands = c.select(col("docId"), col("score"))
+        docFilter.fold(cands)(f => cands.join(f, Seq("docId"), "left_semi"))
+          .orderBy(col("score").desc, col("docId").asc).limit(k)
+      }
 
   /** A term-query batch in one scoring job, finished by a per-qid window
     * under the same (score desc, docId asc) tie-break.
@@ -261,22 +292,34 @@ object QueryEngine {
 
   // --------------------------------------------------- shared scorer glue
 
-  /** Consume ONE shard group from a (shardId, term, minDocId)-sorted block
-    * stream: every block of the head shard, keyed by term. The single
-    * definition behind both block scorers (term and phrase) — a
-    * shard-grouping fix lands everywhere at once.
+  /** The shard groups of a (shardId, term, minDocId)-sorted block stream,
+    * consumed lazily one at a time: every block of one shard, per term in
+    * minDocId order. The single definition behind both block scorers (term
+    * and phrase), so each holds one shard's blocks and matches at a time,
+    * never the whole partition's.
     */
-  private[query] def nextShardGroup(
-      it: BufferedIterator[PostingBlock]
-  ): scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[PostingBlock]] = {
-    val shard = it.head.shardId
-    val byTerm = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[PostingBlock]]
-    while (it.hasNext && it.head.shardId == shard) {
-      val blk = it.next()
-      byTerm.getOrElseUpdate(blk.term, scala.collection.mutable.ArrayBuffer.empty) += blk
+  private def shardGroups(
+      it: BufferedIterator[PostingBlock]): Iterator[Map[String, Array[PostingBlock]]] =
+    Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+      val shard = it.head.shardId
+      val byTerm = scala.collection.mutable.LinkedHashMap
+        .empty[String, scala.collection.mutable.ArrayBuffer[PostingBlock]]
+      while (it.hasNext && it.head.shardId == shard) {
+        val blk = it.next()
+        byTerm.getOrElseUpdate(blk.term, scala.collection.mutable.ArrayBuffer.empty) += blk
+      }
+      byTerm.iterator.map { case (t, bs) => t -> bs.sortBy(_.minDocId).toArray }.toMap
     }
-    byTerm
+
+  /** A per-shard decode memo, so a block read by several cursors (several
+    * queries, or a query's terms and its phrase) is decoded once. Keyed by
+    * (term, minDocId): blockIdx is NOT unique within a (shard, term) after
+    * an incremental append (delta blocks restart at 0); minDocId is,
+    * because block docId ranges are disjoint.
+    */
+  private def shardDecoder(): PostingBlock => Array[Codec.P] = {
+    val memo = scala.collection.mutable.HashMap.empty[(String, Long), Array[Codec.P]]
+    blk => memo.getOrElseUpdate((blk.term, blk.minDocId), Codec.decode(blk.payload, blk.n))
   }
 
   /** Bounded top-k accumulator under the global tie-break (score desc,
@@ -543,38 +586,33 @@ object QueryEngine {
     * count, idf over the phrase df) — exactly [[phraseTopK]].
     *
     * Routing (property-tested against a scalar oracle in SearchSpec):
-    *   - no phrase, no `field:value` → the one term evaluator: block-max
-    *                                   WAND over the positive terms with
-    *                                   minimum-should-match m and the
-    *                                   `-term` exclusions checked lazily per
-    *                                   candidate. Plain (m=1), AND (m=n),
-    *                                   m-of-n and `-term` queries all run
-    *                                   it, so AND is block-max pruned too;
-    *                                   `tok*` stems expand first (one
-    *                                   capped, predicate-pushed scan)
+    *   - `field:value` alone         → match-all under the filter:
+    *                                   constant score 0, docId order
     *   - lone `"phrase"~s`           → [[phraseTopK]]
-    *   - `"phrase"` + free terms     → [[phraseFilterRank]]
-    *   - any other mix               → [[composedTopK]] (phrase survivors
-    *                                   semi-join-prune the term postings;
-    *                                   exclusions anti-join; msm on the
-    *                                   per-doc distinct-match count)
-    *   - `field:value` anywhere      → filter-then-rank through
-    *                                   [[composedTopK]]: the doc metadata
-    *                                   relation (`docs`, REQUIRED then) is
-    *                                   filtered on the named columns —
-    *                                   predicate pushed to its parquet —
-    *                                   and doc-level-prunes the candidates.
+    *   - everything else             → the one evaluator: block-max WAND
+    *                                   over the positive terms with
+    *                                   minimum-should-match m; per pivot
+    *                                   doc the `-term` exclusions and each
+    *                                   phrase (positional cursors, within
+    *                                   its slop) are checked lazily, so
+    *                                   plain, AND, m-of-n, `-term`,
+    *                                   wildcard and phrase + term queries
+    *                                   all run it; `tok*` stems expand
+    *                                   first (one capped, predicate-pushed
+    *                                   scan). A `field:value` token keeps
+    *                                   every shard match and semi-joins the
+    *                                   doc metadata relation (`docs`,
+    *                                   REQUIRED then) filtered on the named
+    *                                   columns — predicate pushed to its
+    *                                   parquet — before the top-k finish.
     *                                   Stats stay corpus-wide (Lucene
     *                                   filter semantics, not a sub-corpus
     *                                   rebuild).
     * Every route is bounded by the query terms' postings — never a corpus
-    * scan — and the same plan shapes the dedicated APIs are plan-asserted
-    * to have.
+    * scan.
     *
     * @param docs the live documents view ([[graft.index.IndexStore.Index.docs]]
-    *             as a DataFrame) — only needed for `field:value` queries;
-    *             being the LIVE view it also carries tombstone filtering
-    *             for the fielded path.
+    *             as a DataFrame) — only needed for `field:value` queries.
     */
   def search(
       spark: SparkSession,
@@ -590,14 +628,18 @@ object QueryEngine {
   ): DataFrame = {
     require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
     val pq = parseResolved(query, docs)
+    // a value that does not parse as its column's type ('turn_idx:abc')
+    // compares against null and matches no doc, where an ANSI cast error
+    // would fail the query, or a whole batch; a value that parses folds to
+    // a typed literal, so the predicate still reaches the docs parquet scan
     val fieldFilter: Option[DataFrame] = if (pq.fields.isEmpty) None else {
       val d = docs.get
-      Some(pq.fields.foldLeft(d) { case (acc, (f, v)) => acc.filter(col(f) === v) }
-        .select(col("docId")))
+      Some(pq.fields.foldLeft(d) { case (acc, (f, v)) =>
+        acc.filter(col(f) === lit(v).try_cast(d.schema(f).dataType))
+      }.select(col("docId")))
     }
-    val (positive, excl) =
-      termWeights(pq, expandStems(spark, termStats, stemsOf(pq).map(_._1)), cfg)
-    val m = minShouldMatch
+    val spec = termSpec("", pq, minShouldMatch,
+      expandStems(spark, termStats, stemsOf(pq).map(_._1)), cfg)
     // a filter-only query ('role:user', no scoring terms) is a match-all
     // under the filter: constant score 0, docId order — Lucene's
     // MatchAllDocsQuery + filter shape, not an empty result. '-term'
@@ -607,15 +649,15 @@ object QueryEngine {
     // positive intent at all: a wildcard that expanded to zero dictionary
     // terms ('role:user zzz*') matches nothing, like Lucene — it must not
     // silently widen to every filtered doc (ADVICE r5).
-    if (positive.isEmpty && fieldFilter.nonEmpty && pq.phrases.isEmpty &&
+    if (spec.should.isEmpty && fieldFilter.nonEmpty && pq.phrases.isEmpty &&
         pq.prefixes.isEmpty) {
       import spark.implicits._
       val base = fieldFilter.get
       val filtered =
-        if (excl.isEmpty) base
+        if (spec.mustNot.isEmpty) base
         else {
           val exclDocs = scoringBlocks(blocks).toDF()
-            .filter($"term".isin(excl: _*))
+            .filter($"term".isin(spec.mustNot: _*))
             .select(explode(graft.plans.DecodeBlock($"payload", $"n")).as("pp"))
             .select($"pp.docId".as("docId"))
           base.join(exclDocs, Seq("docId"), "left_anti")
@@ -624,29 +666,21 @@ object QueryEngine {
         .orderBy($"docId".asc).limit(k)
     }
     // more required matches than distinct positive terms is unsatisfiable
-    if (positive.isEmpty || m > positive.size) return emptyScores(spark)
-
-    if (fieldFilter.nonEmpty) {
-      composedTopK(spark, blocks, termStats, corpus, positive, pq.phrases, excl,
-        m, k, cfg, tombstones, fieldFilter)
-    } else if (pq.phrases.isEmpty) {
-      termTopK(spark, blocks, termStats, corpus, TermSpec("", positive, m, excl), k, cfg,
-        tombstones)
-    } else if (pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty &&
-        excl.isEmpty) {
+    if (spec.should.isEmpty || minShouldMatch > spec.should.size) return emptyScores(spark)
+    if (lonePhrase(pq, cfg))
       // a phrase match contains every phrase word, so any satisfiable m is
       // already met — scoring is the phrase-as-one-term PhraseQuery shape
       phraseTopK(spark, blocks, corpus, pq.phrases.head._1, k, cfg,
         pq.phrases.head._2, tombstones)
-    } else if (pq.phrases.size == 1 && pq.phrases.head._2 == 0 &&
-        pq.prefixes.isEmpty && excl.isEmpty && m == 1) {
-      phraseFilterRank(spark, blocks, termStats, corpus, pq.free.mkString(" "),
-        pq.phrases.head._1, k, cfg, tombstones)
-    } else {
-      composedTopK(spark, blocks, termStats, corpus, positive, pq.phrases, excl,
-        m, k, cfg, tombstones)
-    }
+    else termTopK(spark, blocks, termStats, corpus, spec, k, cfg, tombstones, fieldFilter)
   }
+
+  /** A lone quoted phrase — no other term, exclusion or field in the box —
+    * keeps PhraseQuery scoring ([[phraseTopK]]).
+    */
+  private def lonePhrase(pq: ParsedQuery, cfg: IndexBuilder.Config): Boolean =
+    pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty && pq.fields.isEmpty &&
+      pq.excluded.forall(t => Analyzer.tokenize(t, cfg.analyzer).isEmpty)
 
   /** Forgiveness for accidental colons (Lucene-style search boxes see
     * URLs, 're:deploy', field typos): only tokens naming an ACTUAL doc
@@ -675,30 +709,32 @@ object QueryEngine {
   private def stemsOf(pq: ParsedQuery): Seq[(String, Int)] =
     analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
 
-  /** A parsed query's positive (term, qtf) weights — free terms, phrase
-    * words and wildcard expansions, one weight per distinct term — and its
-    * analyzed exclusions. `byStem` holds the dictionary expansion of every
-    * stem of the query ([[expandStems]]).
+  /** A parsed query compiled for the evaluator: positive (term, qtf)
+    * weights — free terms, phrase words and wildcard expansions, one weight
+    * per distinct term — the analyzed exclusions and the analyzed phrases.
+    * `byStem` holds the dictionary expansion of every stem of the query
+    * ([[expandStems]]).
     */
-  private def termWeights(pq: ParsedQuery, byStem: Map[String, Seq[String]],
-      cfg: IndexBuilder.Config): (Seq[(String, Int)], Seq[String]) = {
+  private def termSpec(qid: String, pq: ParsedQuery, m: Int,
+      byStem: Map[String, Seq[String]], cfg: IndexBuilder.Config): TermSpec = {
     val literal = Analyzer.analyzeQuery(
       (pq.free ++ pq.phrases.map(_._1)).mkString(" "), cfg.analyzer)
     val expanded = stemsOf(pq).flatMap { case (p, qtf) => byStem.getOrElse(p, Nil).map(_ -> qtf) }
-    (mergeWeights(literal ++ expanded),
-      pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct)
+    TermSpec(qid, mergeWeights(literal ++ expanded), m,
+      pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct,
+      pq.phrases.map { case (ph, slop) => Phrase(Analyzer.tokenize(ph, cfg.analyzer), slop) })
   }
 
   /** Batched unified search — a whole request batch through the one
-    * search-box grammar in as few jobs as possible: every phrase-free,
-    * field-free query (plain, AND, `-term`, m-of-n, wildcards — every
-    * query's stems expand in ONE dictionary scan) is a term query, and
-    * all of them share ONE scoring job of the term evaluator (one idf
+    * search-box grammar in as few jobs as possible: every query that is
+    * neither fielded nor a lone phrase (plain, AND, `-term`, m-of-n,
+    * wildcards, phrase + terms — every such query's stems expand in ONE
+    * dictionary scan) shares ONE scoring job of the evaluator (one idf
     * collect, shared block scan + per-shard decode memo, the measured ~3×
-    * amortization of the per-job scheduler floor); phrase and fielded
-    * queries run their routed plans and union in. Returns (qid, docId,
-    * score), per-qid top-k, each qid identical to a [[search]] call with
-    * the same text (property-tested).
+    * amortization of the per-job scheduler floor); lone-phrase and
+    * fielded queries run their own [[search]] plans and union in. Returns
+    * (qid, docId, score), per-qid top-k, each qid identical to a
+    * [[search]] call with the same text (property-tested).
     *
     * `minShouldMatch` applies to every query in the batch (callers with
     * per-query msm issue those queries separately).
@@ -725,135 +761,19 @@ object QueryEngine {
     // query that search() would degrade to free text stays in the shared
     // job instead of paying an individual one for a cosmetic token
     val parsed = queries.map { case (qid, q) => (qid, q, parseResolved(q, docs)) }
-    val (terms, other) = parsed.partition { case (_, _, pq) =>
-      pq.phrases.isEmpty && pq.fields.isEmpty
+    val (own, shared) = parsed.partition { case (_, _, pq) =>
+      pq.fields.nonEmpty || lonePhrase(pq, cfg)
     }
     val byStem = expandStems(spark, termStats,
-      terms.flatMap { case (_, _, pq) => stemsOf(pq).map(_._1) })
-    val specs = terms.map { case (qid, _, pq) =>
-      val (positive, excl) = termWeights(pq, byStem, cfg)
-      TermSpec(qid, positive, minShouldMatch, excl)
-    }
+      shared.flatMap { case (_, _, pq) => stemsOf(pq).map(_._1) })
+    val specs = shared.map { case (qid, _, pq) => termSpec(qid, pq, minShouldMatch, byStem, cfg) }
     val batched = termTopKBatch(spark, blocks, termStats, corpus, specs, k, cfg, tombstones)
-    other.foldLeft(batched) { case (acc, (qid, q, _)) =>
+    own.foldLeft(batched) { case (acc, (qid, q, _)) =>
       acc.unionByName(
         search(spark, blocks, termStats, corpus, q, k, minShouldMatch, cfg,
           tombstones, docs)
           .select(lit(qid).as("qid"), $"docId", $"score"))
     }
-  }
-
-  /** The general composed query: every phrase is a filter, exclusions drop
-    * candidates, minimum-should-match gates on the per-doc distinct-match
-    * count, and ranking is the BM25 fold over the positive terms — the
-    * [[phraseFilterRank]] plan generalized.
-    *
-    * Scale shape: each phrase's survivor relation is bounded by its rarest
-    * term and semi-join-prunes the decoded postings (broadcast when that
-    * rarest term's dictionary df — a proven upper bound on the survivor
-    * count, fetched in the same collect as the idfs — fits the cap, else
-    * shuffle); exclusions are a
-    * doc-level anti-join against the excluded terms' postings; everything
-    * sits on the term-pushed block scan. Tombstones are enforced by the
-    * positional matcher inside every phrase filter, or — on the fielded
-    * path — by `docFilter` being derived from the LIVE docs view; every
-    * call has at least one of the two, so no candidate needs a second
-    * check.
-    *
-    * @param docFilter optional doc-level survivor relation (docId) — the
-    *        `field:value` filter-then-rank path. Joined as a plain (AQE-
-    *        adaptive) semi-join, never an unconditional broadcast: a field
-    *        predicate like role:user keeps a constant FRACTION of the
-    *        corpus, unlike a phrase's rarest-term-bounded survivor set.
-    */
-  private[graft] def composedTopK(
-      spark: SparkSession,
-      blocks: Dataset[PostingBlock],
-      termStats: Dataset[TermStat],
-      corpus: CorpusStats,
-      positive: Seq[(String, Int)],
-      phrases: Seq[(String, Int)],
-      excluded: Seq[String],
-      m: Int,
-      k: Int,
-      cfg: IndexBuilder.Config,
-      tombstones: TombstoneSet,
-      docFilter: Option[DataFrame] = None
-  ): DataFrame = {
-    import spark.implicits._
-    require(phrases.nonEmpty || docFilter.nonEmpty,
-      "composedTopK needs a phrase or a doc filter (tombstone enforcement)")
-    if (positive.isEmpty) return emptyScores(spark)
-    // every phrase must analyze to something or the result is empty
-    // (resolve ALL the lazy relations before doing any work — ADVICE r5)
-    val lazySets = phrases.map { case (ph, slop) =>
-      phraseMatches(spark, blocks, ph, cfg, slop, tombstones)
-    }
-    if (lazySets.exists(_.isEmpty)) return emptyScores(spark)
-    val matchSets = lazySets.map(_.get)
-    // ONE stats collect serves the scoring weights AND the join-strategy
-    // gate: a phrase's survivor count is bounded by its rarest term's df
-    // (every match contains every phrase term), so the dictionary df
-    // replaces the round-5 persist + count() probe — the same
-    // driver-safety bound on the broadcast with one fewer eager action
-    // per phrase, and the match relation now has a single consumer inside
-    // the scoring job (no session-cache footprint at all). Slightly more
-    // conservative than the measured count in one corner — min-df > cap
-    // with an actual survivor set under it takes the shuffle join — which
-    // only ever trades a broadcast for the AQE-planned join, never the
-    // reverse. The big decoded-postings side still never shuffles on the
-    // broadcast path (guide §1.2 step 1 / §3.1).
-    val phraseToks = phrases.map { case (ph, _) =>
-      Analyzer.tokenize(ph, cfg.analyzer).distinct
-    }
-    val names = (positive.map(_._1) ++ phraseToks.flatten).distinct
-    val stats: Map[String, (Double, Long)] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> (t.idf, t.df)).toMap
-    // a phrase term absent from the dictionary can match nowhere
-    if (phraseToks.exists(_.exists(t => !stats.contains(t))))
-      return emptyScores(spark)
-    val live = positive.filter { case (t, _) => stats.contains(t) }
-    if (live.isEmpty || live.size < m) return emptyScores(spark)
-    val qdf = broadcast(live.map { case (t, qtf) => (t, qtf, stats(t)._1) }
-      .toDF("term", "qtf", "idf"))
-    val p = cfg.params
-    val post = scoringBlocks(blocks).toDF()
-      .filter($"term".isin(live.map(_._1): _*))
-      .select($"term", explode(graft.plans.DecodeBlock($"payload", $"n")).as("pp"))
-      .select($"term", $"pp.docId".as("docId"), $"pp.tf".as("tf"), $"pp.dl".as("dl"))
-    val phrasePruned0 = matchSets.zip(phraseToks).foldLeft(post) { case (acc, (ms, toks)) =>
-      val survivors = ms.select($"docId")
-      if (toks.map(t => stats(t)._2).min <= PhraseBroadcastCap)
-        acc.join(broadcast(survivors), Seq("docId"), "left_semi")
-      else acc.join(survivors, Seq("docId"), "left_semi")
-    }
-    val phrasePruned = docFilter.fold(phrasePruned0)(f =>
-      phrasePruned0.join(f.select($"docId"), Seq("docId"), "left_semi"))
-    val exclLive = excluded.distinct
-    val pruned =
-      if (exclLive.isEmpty) phrasePruned
-      else {
-        val exclDocs = scoringBlocks(blocks).toDF()
-          .filter($"term".isin(exclLive: _*))
-          .select(explode(graft.plans.DecodeBlock($"payload", $"n")).as("pp"))
-          .select($"pp.docId".as("docId"))
-        phrasePruned.join(exclDocs, Seq("docId"), "left_anti")
-      }
-    // cs has at most one entry per distinct positive term (post is keyed
-    // by (term, docId); q by term), so size(cs) IS the distinct-match count
-    pruned
-      .join(qdf, Seq("term"))
-      .withColumn("contrib",
-        contributionCol($"qtf", $"idf", $"tf", $"dl", corpus.avgdl, p))
-      .groupBy($"docId")
-      .agg(collect_list(struct($"term", $"contrib")).as("cs"))
-      .filter(size($"cs") >= m)
-      .select($"docId",
-        aggregate(array_sort($"cs"), lit(0.0),
-          (acc, x) => acc + x.getField("contrib")).as("score"))
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
   }
 
   // --------------------------------------------------------------- phrase
@@ -872,8 +792,8 @@ object QueryEngine {
     * positions with at least one such chain (the minimal completion is
     * greedy, so existence is exact). slop = 0 degenerates to adjacency.
     *
-    * Plan: term-pushed block scan (positions column read ONLY here — BM25
-    * paths never project it) → per-shard document-at-a-time positional
+    * Plan: term-pushed block scan (positions column read — other paths
+    * project it only for phrase words) → per-shard document-at-a-time positional
     * intersect in mapPartitions (docId-sharding co-locates all of a doc's
     * postings, so no cross-shard coordination; candidates are bounded by
     * the rarest term's postings — never a token-level explode/shuffle) →
@@ -912,23 +832,11 @@ object QueryEngine {
       .limit(k)
   }
 
-  /** Max phrase-survivor rows the composed paths will broadcast (~32 MB
-    * of docIds at 4M — comfortably under broadcast limits); beyond it the
-    * semi-join degrades to a shuffle join rather than risking the driver.
-    * Gated on the phrase's rarest term's dictionary df (survivors ⊆ the
-    * rarest term's postings, so df ≥ the survivor count — driver-safe
-    * without a counting job).
-    */
-  val PhraseBroadcastCap = 4000000L
-
   /** Mixed quoted + free-term query — the search-box semantics for
     * `spark join "data stream"`: the quoted phrase is a FILTER (docs must
     * contain the exact adjacency), and ranking is full BM25 over ALL the
-    * query's terms (phrase words included as regular terms). Exact at any
-    * scale: the candidate set is bounded by the phrase's rarest term, the
-    * term postings come from the term-pushed block scan, and the phrase
-    * survivors prune them with a semi-join before any scoring — no
-    * full-corpus work anywhere.
+    * query's terms (phrase words included as regular terms). It is the
+    * evaluator with one phrase constraint, checked per candidate doc.
     */
   def phraseFilterRank(
       spark: SparkSession,
@@ -940,16 +848,10 @@ object QueryEngine {
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
-  ): DataFrame = {
-    // the single-phrase case of the general composed plan — ONE
-    // implementation of the decode → df-gated-broadcast semi-join →
-    // ascending-term BM25 fold pipeline, so the rank-identity-bearing
-    // fold and the PhraseBroadcastCap degrade rule cannot drift between
-    // this route and search()'s composed route
-    val positive = Analyzer.analyzeQuery(freeTerms + " " + phrase, cfg.analyzer)
-    composedTopK(spark, blocks, termStats, corpus, positive,
-      Seq((phrase, 0)), Nil, 1, k, cfg, tombstones)
-  }
+  ): DataFrame =
+    termTopK(spark, blocks, termStats, corpus,
+      termSpec("", ParsedQuery(Seq(freeTerms), Seq(phrase -> 0), Nil, Nil), 1, Map.empty, cfg),
+      k, cfg, tombstones)
 
   /** The lazy (un-persisted) phrase match relation (docId, tfp, dl) —
     * exposed separately so plan-shape tests can assert on the actual scan
@@ -983,10 +885,11 @@ object QueryEngine {
       .toDF("docId", "tfp", "dl"))
   }
 
-  /** Positional intersect: emits (docId, phraseTf, dl) per matching doc. */
+  /** Positional phrase matching over one shard's blocks. */
   private[query] object PhraseScorer {
 
-    private final class PosCursor(blocks: Array[PostingBlock]) {
+    private final class PosCursor(blocks: Array[PostingBlock],
+        decode: PostingBlock => Array[Codec.P]) {
       private var bi = 0
       private var decoded: Array[Codec.P] = _
       private var poss: Array[Array[Int]] = _
@@ -995,27 +898,13 @@ object QueryEngine {
       loadBlock()
 
       private def loadBlock(): Unit = {
-        val b = blocks(bi)
-        if (b.positions.isEmpty && b.sumTf > 0)
-          throw new IllegalStateException(
-            "phrase query requires a positional index (build with storePositions = true)")
-        decoded = Codec.decode(b.payload, b.n)
-        poss = Codec.decodePositions(b.positions, decoded.map(_.tf))
+        decoded = decode(blocks(bi))
+        poss = Codec.decodePositions(blocks(bi).positions, decoded.map(_.tf))
         pi = 0
       }
 
       def curDoc: Long = decoded(pi).docId
-      def curDl: Int = decoded(pi).dl
       def curPositions: Array[Int] = poss(pi)
-
-      def advance(): Unit = {
-        pi += 1
-        if (pi >= decoded.length) {
-          bi += 1
-          if (bi >= blocks.length) { exhausted = true; decoded = null; poss = null }
-          else loadBlock()
-        }
-      }
 
       /** Skip to the first posting with docId >= target; whole blocks are
         * skipped on maxDocId metadata without decoding. */
@@ -1032,10 +921,11 @@ object QueryEngine {
       }
     }
 
-    /** Rows must arrive sorted by (shardId, term, minDocId). Shard groups
-      * are consumed LAZILY, one at a time: a high-df phrase holds at most
-      * one shard's match set in memory, never the whole partition's
-      * (the per-shard set is itself bounded by the shard's doc range).
+    /** Rows must arrive sorted by (shardId, term, minDocId). Emits
+      * (docId, phraseTf, dl) per matching live doc: the postings of the
+      * shard's rarest phrase word are the candidates, checked by
+      * [[matcher]]. Shard groups are consumed lazily, so a high-df phrase
+      * holds at most one shard's blocks in memory.
       */
     def matchPartition(
         it: BufferedIterator[PostingBlock],
@@ -1044,69 +934,46 @@ object QueryEngine {
         tombstones: TombstoneSet = TombstoneSet.empty
     ): Iterator[(Long, Int, Int)] = {
       val distinctTerms = terms.distinct
-      new Iterator[(Long, Int, Int)] {
-        private var cur: Iterator[(Long, Int, Int)] = Iterator.empty
-        private def refill(): Unit =
-          while (!cur.hasNext && it.hasNext) {
-            val byTerm = nextShardGroup(it)
-            // docId-sharding co-locates a doc's postings: a match needs
-            // every distinct phrase term present in this shard
-            if (distinctTerms.forall(byTerm.contains)) {
-              val cursors = distinctTerms.map(t =>
-                t -> new PosCursor(byTerm(t).sortBy(_.minDocId).toArray)).toMap
-              cur = intersectShard(cursors, terms, slop, tombstones).iterator
-            }
+      shardGroups(it).flatMap { byTerm =>
+        // docId-sharding co-locates a doc's postings: a match needs
+        // every distinct phrase term present in this shard
+        if (!distinctTerms.forall(byTerm.contains)) Iterator.empty
+        else {
+          val decode = shardDecoder()
+          val count = matcher(terms, slop, byTerm, decode)
+          val rarest = distinctTerms.minBy(t => byTerm(t).iterator.map(_.n.toLong).sum)
+          byTerm(rarest).iterator.flatMap(decode(_)).flatMap { p =>
+            // tombstoned docs never match (they'd distort the phrase df)
+            val tfp = if (tombstones.contains(p.docId)) 0 else count(p.docId)
+            if (tfp > 0) Iterator.single((p.docId, tfp, p.dl)) else Iterator.empty
           }
-        override def hasNext: Boolean = { refill(); cur.hasNext }
-        override def next(): (Long, Int, Int) = { refill(); cur.next() }
+        }
       }
     }
 
-    /** Leapfrog docId intersection + (slop-windowed) position count. */
-    private def intersectShard(
-        cursors: Map[String, PosCursor],
-        terms: Seq[String],
-        slop: Int,
-        tombstones: TombstoneSet = TombstoneSet.empty
-    ): Seq[(Long, Int, Int)] = {
-      val cs = cursors.values.toArray
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-      var done = false
-      while (!done) {
-        var target = Long.MinValue
-        var i = 0
-        while (i < cs.length && !done) {
-          if (cs(i).exhausted) done = true
-          else if (cs(i).curDoc > target) target = cs(i).curDoc
-          i += 1
-        }
-        if (!done) {
-          // advance all cursors to the current max docId
-          var aligned = true
-          var j = 0
-          while (j < cs.length && !done) {
-            if (cs(j).curDoc < target) {
-              cs(j).advanceTo(target)
-              if (cs(j).exhausted) done = true
-              else if (cs(j).curDoc != target) aligned = false
-            }
-            j += 1
-          }
-          if (!done && aligned) {
-            // tombstoned docs never match (they'd distort the phrase df)
-            val dead = tombstones.contains(target)
-            val tfp = if (dead) 0 else phraseCount(terms, cursors, slop)
-            if (tfp > 0) out += ((target, tfp, cs(0).curDl))
-            var m = 0
-            while (m < cs.length && !done) {
-              cs(m).advance()
-              if (cs(m).exhausted) done = true
-              m += 1
-            }
-          }
-        }
-      }
-      out.toSeq
+    /** The phrase check of one shard (`blocks`: minDocId-sorted per term,
+      * holding every phrase word), for candidate docs offered in
+      * increasing docId order: the phrase occurrence count of a doc, 0 when
+      * it does not match. One positional cursor per distinct word, built
+      * on the first candidate and advanced lazily to each later one;
+      * [[phraseCount]] decides once every word's cursor lands on the doc.
+      * A word whose blocks carry no positions fails at once, before any
+      * candidate: a phrase never runs silently empty on a non-positional
+      * index.
+      */
+    def matcher(terms: Seq[String], slop: Int, blocks: Map[String, Array[PostingBlock]],
+        decode: PostingBlock => Array[Codec.P]): Long => Int = {
+      val distinctTerms = terms.distinct
+      if (distinctTerms.exists(t => blocks(t).exists(b => b.positions.isEmpty && b.sumTf > 0)))
+        throw new IllegalStateException(
+          "phrase query requires a positional index (build with storePositions = true)")
+      lazy val cursors = distinctTerms.map(t => t -> new PosCursor(blocks(t), decode)).toMap
+      doc =>
+        if (cursors.valuesIterator.forall { c =>
+              c.advanceTo(doc)
+              !c.exhausted && c.curDoc == doc
+            }) phraseCount(terms, cursors, slop)
+        else 0
     }
 
     /** # of start positions with a valid occurrence: a strictly increasing
@@ -1145,9 +1012,9 @@ object QueryEngine {
     }
   }
 
-  /** The one per-shard term loop: document-at-a-time block-max WAND with
-    * minimum-should-match and lazily checked exclusions, one shard at a
-    * time within a partition.
+  /** The one per-shard query loop: document-at-a-time block-max WAND with
+    * minimum-should-match and lazily checked exclusions and phrases, one
+    * shard at a time within a partition.
     */
   private[query] object WandScorer {
 
@@ -1211,9 +1078,12 @@ object QueryEngine {
     }
 
     /** Rows must arrive sorted by (shardId, term, minDocId). Every query
-      * is scored against each shard group while its blocks are at hand.
-      * Decoded blocks are memoized per shard, so a block shared by several
-      * queries is decoded once.
+      * is scored against each shard group while its blocks are at hand,
+      * through the shard's decode memo, so a block shared by several
+      * queries is decoded once. Output is lazy, one (shard, query) at a
+      * time: an executor holds at most one shard's top-k of one query — with
+      * k = Int.MaxValue (fielded queries) every match of that query in the
+      * shard, bounded by the shard's doc count.
       */
     def scorePartition(
         it: BufferedIterator[PostingBlock],
@@ -1221,35 +1091,33 @@ object QueryEngine {
         k: Int,
         k1: Double, b: Double, avgdl: Double,
         tombstones: TombstoneSet = TombstoneSet.empty
-    ): Iterator[(String, Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
-      while (it.hasNext) {
-        val byTerm = nextShardGroup(it)
-        val sortedByTerm: Map[String, Array[PostingBlock]] =
-          byTerm.iterator.map { case (t, bs) => t -> bs.sortBy(_.minDocId).toArray }.toMap
-        // keyed by (term, minDocId): blockIdx is NOT unique within a
-        // (shard, term) after an incremental append (delta blocks restart
-        // at 0); minDocId is, because block docId ranges are disjoint
-        val memo = scala.collection.mutable.HashMap.empty[(String, Long), Array[Codec.P]]
-        val decode: PostingBlock => Array[Codec.P] = blk =>
-          memo.getOrElseUpdate((blk.term, blk.minDocId), Codec.decode(blk.payload, blk.n))
+    ): Iterator[(String, Long, Double)] =
+      shardGroups(it).flatMap { byTerm =>
+        val decode = shardDecoder()
         def cursor(term: String, weight: Double): Option[Cursor] =
-          sortedByTerm.get(term).map(new Cursor(term, weight, _, k1, b, avgdl, decode))
-        queries.foreach { case (qid, q) =>
+          byTerm.get(term).map(new Cursor(term, weight, _, k1, b, avgdl, decode))
+        queries.iterator.flatMap { case (qid, q) =>
           // q.should is term-sorted, which pins the ascending-term order
           // the cursors' contributions are summed in
           val should = q.should.flatMap(qt => cursor(qt.term, qt.weight)).toArray
           // docId-sharding co-locates a doc's postings: a shard holding
-          // fewer than m of the SHOULD terms has no match
-          if (should.length >= q.m) {
+          // fewer than m of the SHOULD terms, or lacking a phrase word, has
+          // no match
+          if (should.length < q.m || !q.phrases.forall(_.terms.forall(byTerm.contains)))
+            Iterator.empty
+          else {
             val mustNot = q.mustNot.flatMap(cursor(_, 0.0)).toArray
-            out ++= wandShard(should, q.m, mustNot, k, tombstones)
-              .map { case (d, s) => (qid, d, s) }
+            val phrases = q.phrases.map(ph => PhraseScorer.matcher(ph.terms, ph.slop, byTerm, decode))
+            // pivot docs only grow, so the MUST_NOT and phrase cursors
+            // advance lazily, and only for docs that would be scored
+            def accept(doc: Long): Boolean =
+              !tombstones.contains(doc) &&
+                !mustNot.exists { c => c.advanceTo(doc); !c.exhausted && c.curDoc == doc } &&
+                phrases.forall(_(doc) > 0)
+            wandShard(should, q.m, accept, k).iterator.map { case (d, s) => (qid, d, s) }
           }
         }
       }
-      out.iterator
-    }
 
     /** Block-max WAND (Ding & Suel) generalized to minimum-should-match,
       * the way Lucene's WANDScorer handles minShouldMatch: the pivot is the
@@ -1258,21 +1126,18 @@ object QueryEngine {
       * pivot either sits under fewer than m cursors or cannot beat θ. Once
       * the pivot doc is reached by every cursor in front of it, the sum of
       * their *current-block* upper bounds must still beat θ, or the doc is
-      * skipped without scoring. Only a doc that passes is checked against
-      * the MUST_NOT cursors, which advance lazily (pivot docs only grow).
+      * skipped without scoring. Only a doc that passes is offered to
+      * `accept` (tombstones, MUST_NOT terms, phrases) and, if accepted,
+      * scored.
       * θ respects the global tie-break (score desc, docId asc): within a
       * shard docIds only grow, so a candidate whose upper bound is <= θ can
       * never displace a heap entry.
       *
       * m = 1 with no exclusions is plain BMW; m = n is AND.
       */
-    private def wandShard(cursors: Array[Cursor], m: Int, mustNot: Array[Cursor], k: Int,
-        tombstones: TombstoneSet): Seq[(Long, Double)] = {
+    private def wandShard(cursors: Array[Cursor], m: Int, accept: Long => Boolean,
+        k: Int): Seq[(Long, Double)] = {
       val heap = new TopKHeap(k)
-      def excluded(doc: Long): Boolean = mustNot.exists { c =>
-        c.advanceTo(doc)
-        !c.exhausted && c.curDoc == doc
-      }
 
       val live = scala.collection.mutable.ArrayBuffer(cursors.toIndexedSeq: _*)
       while (live.length >= m) {
@@ -1300,13 +1165,13 @@ object QueryEngine {
             pivotIdx += 1
           if (sorted.head.curDoc == pivotDoc) {
             // sorted(0..pivotIdx) all sit on pivotDoc: pivotIdx + 1 >= m
-            // matches. Tombstoned (deleted) docs are skipped exactly like a
-            // failed block-max bound: never scored, never a heap slot
+            // matches. A rejected doc is skipped exactly like a failed
+            // block-max bound: never scored, never a heap slot
             val matching = sorted.take(pivotIdx + 1).toArray
             var blockAcc = 0.0
             var j = 0
             while (j < matching.length) { blockAcc += matching(j).curBlockUb; j += 1 }
-            if (blockAcc > theta && !tombstones.contains(pivotDoc) && !excluded(pivotDoc)) {
+            if (blockAcc > theta && accept(pivotDoc)) {
               // score pivotDoc exactly, ascending term order
               val byTerm = matching.sortBy(_.term)
               var score = 0.0

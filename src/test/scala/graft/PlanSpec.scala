@@ -166,20 +166,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("composed search keeps the term-pushed scan and the top-k finish") {
+    // phrase + term + exclusion runs in the evaluator: the phrase is
+    // checked per candidate over the positions of the same block scan, so
+    // the plan has no phrase-survivor or exclusion join
     val idx = SparkEntry.index(spark, dir)
     val p = plan(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
       "\"data stream\"~1 spark -join", 10, 1, SparkEntry.cfg, idx.tombstoneSet))
+    val scans = "Scan parquet".r.findAllMatchIn(p).size
+    assert(scans == 1, s"expected ONE block scan, got $scans:\n$p")
     assert(p.contains("PushedFilters: [In(term"), p)
+    assert("FileScan parquet \\[[^\\]]*\\]".r.findAllIn(p).exists(_.contains("positions#")),
+      "the phrase check needs the positions column:\n" + p)
+    assert(!p.contains("LeftSemi") && !p.contains("LeftAnti"),
+      "phrase or exclusion fell back to a join:\n" + p)
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    // r6 optimization: the phrase-survivor semi-join is gated on the
-    // rarest phrase term's dictionary df (a proven bound on the survivor
-    // count) instead of a persist + count() probe — the match relation
-    // must appear INSIDE this one plan as a broadcast build side, not as
-    // a separately-materialized InMemoryRelation
-    assert("BroadcastHashJoin \\[[^\\]]*\\], \\[[^\\]]*\\], LeftSemi".r.findFirstIn(p).isDefined,
-      "df-gated phrase survivor broadcast missing:\n" + p)
-    assert(!p.contains("InMemoryTableScan"),
-      "composed path regressed to a persisted phrase match set:\n" + p)
   }
 }

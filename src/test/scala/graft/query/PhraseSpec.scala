@@ -181,11 +181,19 @@ class PhraseSpec extends AnyFunSuite {
     IndexStore.build(spark, spark.createDataset(turns)(enc), dir, "np", noPos)
     val idx = IndexStore.load(spark, dir)
     assert(!idx.manifest.positional)
-    val ex = intercept[Exception] {
-      QueryEngine.phraseTopK(spark, idx.blocks, idx.corpus, "data spark", 10, noPos).collect()
-    }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("positional")), s"unexpected error: $ex")
+    // the lone phrase, and a phrase checked inside the term evaluator —
+    // also when no candidate reaches the check ('-spark' rejects the only doc)
+    val runs: Seq[() => Unit] = Seq(
+      () => QueryEngine.phraseTopK(spark, idx.blocks, idx.corpus, "data spark", 10, noPos).collect(),
+      () => QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
+        "\"data spark\" data", 10, cfg = noPos).collect(),
+      () => QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
+        "\"data spark\" data -spark", 10, cfg = noPos).collect())
+    runs.foreach { run =>
+      val ex = intercept[Exception](run())
+      assert(messages(ex).exists(_.contains("positional")), s"unexpected error: $ex")
+    }
   }
 }

@@ -10,7 +10,7 @@ import graft.index.{IndexBuilder, IndexStore}
 import graft.model.Turn
 
 /** The unified search box (QueryEngine.search): grammar parsing, routing
-  * identity to every dedicated scorer, and the composed path (phrase
+  * identity to every dedicated scorer, and composed queries (phrase
   * filter + exclusions + minimum-should-match in one query) against a
   * brute-force scalar oracle.
   */
@@ -324,6 +324,20 @@ class SearchSpec extends AnyFunSuite {
         "http example com term0000", 10, cfg)),
       "docs-less URL token must degrade to free text, not crash")
     intercept[IllegalArgumentException] { sNoDocs("role:user x") }
+    // a typed field value that does not parse matches nothing instead of
+    // failing the query (ANSI cast error) — or the whole batch around it
+    assert(s("turn_idx:abc term0000").isEmpty)
+    assert(s("ts:zzz").isEmpty)
+    val plain = s("term0000")
+    assert(plain.nonEmpty, "vacuous plain query")
+    Seq("turn_idx:abc term0000", "ts:zzz").foreach { bad =>
+      val got = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+        Seq("bad" -> bad, "ok" -> "term0000"), 10, 1, cfg,
+        graft.index.TombstoneSet.empty, docsDf).collect()
+      assert(got.forall(_.getString(0) == "ok"), s"[$bad] returned hits")
+      assert(got.map(r => (r.getLong(1), r.getDouble(2))).toSeq.sortBy(x => (-x._2, x._1)) == plain,
+        s"a batch holding [$bad] lost the plain query's hits")
+    }
   }
 
   test("searchBatch: every qid identical to its single search() call") {
@@ -353,18 +367,21 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  /** Spark jobs `run` starts, counted on its own job group. */
+  private def jobsOf(group: String)(run: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try run finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   test("searchBatch: -term queries share the one scoring job") {
     val turns = TranscriptGen.turns(seed = 128, nConvs = 30)
     val idx = buildIndex(turns, "graft-search-batch-jobs")
-    val sc = spark.sparkContext
-    def jobs(group: String, qs: Seq[(String, String)]): Int = {
-      sc.setJobGroup(group, group)
-      try {
-        val hits = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
-          qs, 10, 1, cfg).collect()
-        assert(hits.map(_.getString(0)).distinct.length == qs.size, s"vacuous batch $qs")
-      } finally sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(group).length
+    def jobs(group: String, qs: Seq[(String, String)]): Int = jobsOf(group) {
+      val hits = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+        qs, 10, 1, cfg).collect()
+      assert(hits.map(_.getString(0)).distinct.length == qs.size, s"vacuous batch $qs")
     }
     val four = Seq(
       "n1" -> "term0000 term0001 -term0002",
@@ -375,6 +392,29 @@ class SearchSpec extends AnyFunSuite {
     val all = jobs("graft-batch-jobs-four", four)
     assert(one > 0, "job group recorded no jobs")
     assert(all <= one, s"a batch of four -term queries ran $all jobs, a batch of one $one")
+    val phrased = Seq(
+      "p1" -> "\"term0000 term0001\" term0002",
+      "p2" -> "\"term0001 term0002\" term0000",
+      "p3" -> "\"term0000 term0002\"~2 term0003",
+      "p4" -> "\"term0002 term0003\"~1 term0001")
+    val pOne = jobs("graft-batch-jobs-phrase-one", phrased.take(1))
+    val pAll = jobs("graft-batch-jobs-phrase-four", phrased)
+    assert(pAll <= pOne, s"a batch of four phrase + term queries ran $pAll jobs, a batch of one $pOne")
+  }
+
+  test("phrase + term queries run no more Spark jobs than a plain query") {
+    val turns = TranscriptGen.turns(seed = 130, nConvs = 30)
+    val idx = buildIndex(turns, "graft-search-jobs")
+    def jobs(q: String): Int = jobsOf("graft-search-jobs-" + q.hashCode) {
+      assert(searchTop(idx, q).nonEmpty, s"vacuous query [$q]")
+    }
+    val plain = jobs("term0000 term0001 term0002")
+    assert(plain > 0, "job group recorded no jobs")
+    Seq("term0002 \"term0000 term0001\"", "\"term0000 term0001\"~2 term0002 -term0005")
+      .foreach { q =>
+        val n = jobs(q)
+        assert(n <= plain, s"[$q] ran $n jobs, the plain query $plain")
+      }
   }
 
   test("filter-only search on a delete-carrying index never returns a tombstoned doc") {
